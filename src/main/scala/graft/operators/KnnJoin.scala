@@ -74,10 +74,9 @@ object KnnJoin {
         s"cached stats for $root@$snapshotId are stale " +
           s"(${s.deleted} rows deleted since last collect) — consider TableStats.collect")
     }
-    val n = st.map(_.count)
-      .orElse(Some(SpatialTable.manifestInfo(spark, root, snapshotId)
-        .partitions.values.sum).filter(_ > 0))
-    apply(spark, SpatialTable.read(spark, root, snapshotId), lonCol, latCol,
+    val info = SpatialTable.manifestInfo(spark, root, snapshotId)
+    val n = st.map(_.count).orElse(Some(info.partitions.values.sum).filter(_ > 0))
+    apply(spark, SpatialTable.read(spark, root, info), lonCol, latCol,
       queries, qidCol, qLonCol, qLatCol, k, res, maxRings, metric, tieBreakCols,
       pointCount = n)
   }

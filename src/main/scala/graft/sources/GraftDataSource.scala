@@ -507,7 +507,7 @@ case class GraftRelation(sqlContext: SQLContext,
     // and the translated filters re-apply exactly below
     val base0 = extractBBox(filters) match {
       case Some(b) => SpatialTable.readBBox(spark, root, snapshotId, b, lonCol, latCol)
-      case None => SpatialTable.read(spark, root, snapshotId)
+      case None => SpatialTable.read(spark, root, info)
     }
     val base = extractTimeBins(filters) match {
       case Some((b0, b1)) => base0.where(col("time_bin").between(b0, b1))

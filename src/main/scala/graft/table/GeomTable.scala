@@ -6,7 +6,7 @@ import graft.geom.GeomOps
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.StructType
 
 /**
  * Snapshot layout for NON-POINT geometries — the reference's XZ2/XZ3
@@ -48,6 +48,12 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructFiel
  * inclusive envelope re-check on the stored extent columns (pure
  * codegen) -> exact JTS st_intersects refine. At 10^12 rows the scan
  * touches only the pruned chunks' row groups; nothing shuffles.
+ *
+ * Every chunked snapshot and index-layout read is planned from the
+ * parsed manifest through a [[SnapshotIndex]] (as in SpatialTable):
+ * the directory levels above are partition filters it evaluates
+ * against the manifest's keys, so building a query lists nothing and
+ * its execution lists only the kept chunk directories.
  */
 object GeomTable {
 
@@ -82,6 +88,8 @@ object GeomTable {
     def relpath: String =
       bin.map(b => s"time_bin=$b/").getOrElse("") + s"$ChunkCol=$chunk"
     def sourceKey: String = bin.map(b => s"$b/$chunk").getOrElse(chunk.toString)
+    /** The partition-column values, in [[GInfo.partitionCols]] order. */
+    def values: Seq[Any] = bin.toSeq :+ chunk
   }
 
   final case class Manifest(res: Int, period: String, dtg: Option[String],
@@ -100,6 +108,8 @@ object GeomTable {
       if (temporal) Seq("time_bin", ChunkCol) else Seq(ChunkCol)
     def readOrder: Seq[String] =
       schema.get.fieldNames.filterNot(partitionCols.contains).toSeq ++ partitionCols
+    /** The manifest schema in [[readOrder]]. */
+    def readSchema: StructType = StructType(readOrder.map(schema.get(_)))
     def physicalKeys: Map[GKey, String] =
       if (scoped) sources else partitions.keys.map(_ -> snapshot).toMap
   }
@@ -276,16 +286,16 @@ object GeomTable {
     GInfo(snapshotId, m, schema, parts, sources, scoped)
   }
 
-  private def emptyOf(spark: SparkSession, info: GInfo): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(info.readOrder.map(f => info.schema.get(f))))
-
-  /** Snapshot scan. Chunked snapshots resolve through the manifest —
-    * self-contained ones list their own chunk directories, scoped ones
-    * each live chunk's PHYSICAL holder — under one shared basePath so
-    * the partition columns keep their written types and chunk-directory
-    * pruning behaves identically either way. Legacy snapshots read
-    * their directory directly. */
+  /** Snapshot scan, planned from the manifest like SpatialTable.read:
+    * each live chunk key is one leaf of a [[SnapshotIndex]] — its
+    * directory under the snapshot that physically holds it (this one,
+    * or the ancestor a scoped mutation inherited it from) — and the
+    * manifest schema is the scan schema. Building the DataFrame lists
+    * nothing; the scan lists only the chunk (and time_bin) directories
+    * its partition filters keep. A fully deleted snapshot reads as an
+    * empty frame with the manifest schema. Legacy (pre-chunk)
+    * snapshots, whose manifests record neither schema nor partitions,
+    * read their directory directly. */
   def read(spark: SparkSession, root: String, snapshotId: String): DataFrame =
     read(spark, root, ginfo(spark, root, snapshotId))
 
@@ -293,21 +303,17 @@ object GeomTable {
     * query (review r5: readBBox was re-parsing the manifest three times
     * through the delegation chain — on an object store that is 3-5 GETs
     * per query for one small JSON). */
-  private[graft] def read(spark: SparkSession, root: String, info: GInfo): DataFrame = {
-    val snapshotId = info.snapshot
-    if (!info.chunked) spark.read.parquet(s"$root/data/snapshot=$snapshotId")
-    else {
-      val phys = info.physicalKeys
-      if (phys.isEmpty) emptyOf(spark, info)
-      else {
-        val withSnap = StructType(info.schema.get.fields :+ StructField("snapshot", StringType))
-        val paths = phys.toSeq.sortBy(_._1.relpath)
-          .map { case (k, src) => s"$root/data/snapshot=$src/${k.relpath}" }
-        spark.read.schema(withSnap).option("basePath", s"$root/data").parquet(paths: _*)
-          .select(info.readOrder.map(col): _*)
-      }
-    }
-  }
+  private[graft] def read(spark: SparkSession, root: String, info: GInfo): DataFrame =
+    if (!info.chunked) spark.read.parquet(s"$root/data/snapshot=${info.snapshot}")
+    else dataScan(spark, root, info, info.physicalKeys.toSeq)
+
+  /** A scan over the given live chunk keys (key -> physical holder). */
+  private def dataScan(spark: SparkSession, root: String, info: GInfo,
+                       keys: Seq[(GKey, String)]): DataFrame =
+    SnapshotIndex.scan(spark, info.readSchema, info.partitionCols,
+      keys.sortBy(_._1.relpath).map { case (k, src) =>
+        (k.values, s"$root/data/snapshot=$src/${k.relpath}")
+      })
 
   /** The layout parameters the snapshot was WRITTEN with. Queries must
     * plan against these — XZ codes built at a different res (or time
@@ -327,7 +333,7 @@ object GeomTable {
   /** Coarse-chunk DIRECTORY pruning for a bbox: any geometry
     * intersecting the box has its chunk code inside the coarse XZ
     * ranges (the XZ cover guarantee), so a BETWEEN on the partition
-    * column prunes whole chunk directories at plan time. Legacy
+    * column prunes whole chunk directories before any is listed. Legacy
     * layouts (no chunk column) skip this level. */
   private def chunkPrune(df: DataFrame, info: GInfo,
                          minx: Double, miny: Double, maxx: Double, maxy: Double): DataFrame =
@@ -496,12 +502,8 @@ object GeomTable {
     val userFields = info.schema.get.fields.filterNot(f => DerivedCols(f.name))
     def emptyUser = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(userFields))
-    val withSnap = StructType(info.schema.get.fields :+ StructField("snapshot", StringType))
     def srcRows(keys: Seq[GKey]): DataFrame =
-      if (keys.isEmpty) emptyUser
-      else spark.read.schema(withSnap).option("basePath", s"$root/data")
-        .parquet(keys.sortBy(_.relpath)
-          .map(k => s"$root/data/snapshot=${srcPhys(k)}/${k.relpath}"): _*)
+      dataScan(spark, root, info, keys.map(k => k -> srcPhys(k)))
         .select(userFields.toSeq.map(f => col(f.name)): _*)
 
     val out0 = withDerived(info, transform(srcRows(p0live)))
@@ -669,15 +671,10 @@ object GeomTable {
   // only the buckets where a mutated row's old/new value hashes, the
   // rest inherit by reference through a sources sidecar.
 
-  private def indexMarkerPath(root: String, id: String, attr: String) =
-    s"$root/_manifests/$id.attr_$attr.committed"
-  private def indexSourcesPath(root: String, id: String, attr: String) =
-    s"$root/_manifests/$id.attr_$attr.sources"
-
   def writeAttributeIndex(spark: SparkSession, root: String, snapshotId: String,
                           attrCol: String, buckets: Int = 16): Unit = {
     val f = fs(spark, root)
-    val marker = indexMarkerPath(root, snapshotId, attrCol)
+    val marker = Snapshots.indexMarkerPath(root, snapshotId, attrCol)
     if (f.exists(new Path(marker))) return // resume: done
     read(spark, root, snapshotId)
       .withColumn("attr_bucket", pmod(xxhash64(col(attrCol)), lit(buckets)).cast("int"))
@@ -692,92 +689,20 @@ object GeomTable {
   }
 
   def indexBuckets(spark: SparkSession, root: String, snapshotId: String,
-                   attrCol: String): Option[Int] = {
-    val f = fs(spark, root)
-    val p = new Path(indexMarkerPath(root, snapshotId, attrCol))
-    if (!f.exists(p)) None
-    else {
-      val in = f.open(p)
-      val text = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8").trim
-        finally in.close()
-      if (text.isEmpty) None else Some(text.linesIterator.next().toInt)
-    }
-  }
+                   attrCol: String): Option[Int] =
+    Snapshots.indexMarker(spark, root, snapshotId, attrCol).flatMap(Snapshots.bucketsOf)
 
   /** Committed attribute-index layouts for a snapshot. */
   def indexedColumns(spark: SparkSession, root: String,
-                     snapshotId: String): Map[String, Option[Int]] = {
-    val f = fs(spark, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Map.empty
-    else f.listStatus(rootPath).toSeq.map(_.getPath.getName)
-      .collect { case n if n.startsWith("index_") => n.stripPrefix("index_") }
-      .filter(a => f.exists(new Path(indexMarkerPath(root, snapshotId, a))))
-      .map(a => a -> indexBuckets(spark, root, snapshotId, a))
-      .toMap
-  }
+                     snapshotId: String): Map[String, Option[Int]] =
+    Snapshots.indexedColumns(spark, root, snapshotId)
 
-  /** attr_bucket -> physical snapshot: the sources sidecar when the
-    * layout was delta-rebuilt, else its own directory listing. */
-  private def indexPhysical(spark: SparkSession, root: String, id: String,
-                            attr: String): Map[Int, String] = {
-    val f = fs(spark, root)
-    val jp = new Path(indexSourcesPath(root, id, attr))
-    if (f.exists(jp)) {
-      val in = f.open(jp)
-      val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        finally in.close()
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt).get("sources")
-      val it = n.fields()
-      val b = Map.newBuilder[Int, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey.toInt -> e.getValue.asText }
-      b.result()
-    } else {
-      val dir = new Path(s"$root/index_$attr/snapshot=$id")
-      if (!f.exists(dir)) Map.empty
-      else f.listStatus(dir).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("attr_bucket=") =>
-          s.stripPrefix("attr_bucket=").toInt -> id }
-        .toMap
-    }
-  }
-
-  /** Resolution-aware index scan (self-contained or delta-rebuilt). */
-  private def indexRead(spark: SparkSession, root: String, id: String,
-                        attr: String, info: GInfo): DataFrame = {
-    val f = fs(spark, root)
-    if (!f.exists(new Path(indexSourcesPath(root, id, attr)))) {
-      // explicit schema, never inference: an index built on an EMPTY
-      // snapshot has a directory with no parquet files, and inference
-      // would crash every later equality query instead of answering
-      // empty (review r5b #1); legacy manifests carry no schema, but
-      // their layouts predate empty-write support
-      val dir = s"$root/index_$attr/snapshot=$id"
-      info.schema match {
-        case Some(s) =>
-          val order = info.readOrder :+ "attr_bucket"
-          spark.read.schema(StructType(s.fields :+ StructField("attr_bucket", IntegerType)))
-            .parquet(dir)
-            .select(order.map(col): _*)
-        case None => spark.read.parquet(dir)
-      }
-    } else {
-      val order = info.readOrder :+ "attr_bucket"
-      val phys = indexPhysical(spark, root, id, attr)
-      if (phys.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(info.readOrder.map(c => info.schema.get(c)) :+
-            StructField("attr_bucket", IntegerType)))
-      else {
-        val schema = StructType(info.schema.get.fields :+
-          StructField("attr_bucket", IntegerType) :+ StructField("snapshot", StringType))
-        val paths = phys.toSeq.sortBy(_._1)
-          .map { case (b, src) => s"$root/index_$attr/snapshot=$src/attr_bucket=$b" }
-        spark.read.schema(schema).option("basePath", s"$root/index_$attr").parquet(paths: _*)
-          .select(order.map(col): _*)
-      }
-    }
-  }
+  /** Index layout scan, planned like [[read]] (Snapshots.indexRead).
+    * Legacy manifests carry no schema; their layouts read by directory. */
+  private[graft] def indexRead(spark: SparkSession, root: String, info: GInfo,
+                               attr: String): DataFrame =
+    if (!info.chunked) spark.read.parquet(s"$root/index_$attr/snapshot=${info.snapshot}")
+    else Snapshots.indexRead(spark, root, info.snapshot, attr, info.readSchema)
 
   /** Equality scan through the attribute index: plan-time bucket
     * pruning + sorted-attr row-group skipping. The probe literal casts
@@ -796,7 +721,7 @@ object GeomTable {
   private[graft] def readByAttribute(spark: SparkSession, root: String, info: GInfo,
                                      attrCol: String, value: Any,
                                      buckets: Option[Int]): DataFrame = {
-    val idx = indexRead(spark, root, info.snapshot, attrCol, info)
+    val idx = indexRead(spark, root, info, attrCol)
     val typed = lit(value).cast(idx.schema(attrCol).dataType)
     val pruned = buckets match {
       case Some(n) => idx.where(col("attr_bucket") ===
@@ -815,7 +740,7 @@ object GeomTable {
                                  attr: String, removed: DataFrame, addedIndexed: DataFrame,
                                  idColumn: String, info: GInfo): Unit = {
     val f = fs(spark, root)
-    val marker = indexMarkerPath(root, to, attr)
+    val marker = Snapshots.indexMarkerPath(root, to, attr)
     if (f.exists(new Path(marker))) return // resume: done
     val n = indexBuckets(spark, root, from, attr).getOrElse(16)
     def bucketOf(c: Column) = pmod(xxhash64(c), lit(n)).cast("int")
@@ -823,21 +748,16 @@ object GeomTable {
       removed.select(bucketOf(col(attr)).as("b"))
         .unionByName(addedIndexed.select(bucketOf(col(attr)).as("b")))
         .distinct().collect().map(_.getInt(0)).toSet
-    val phys = indexPhysical(spark, root, from, attr)
+    val phys = Snapshots.indexPhysical(spark, root, from, attr)
     val order = info.readOrder :+ "attr_bucket"
     val rebuildOld = affected.intersect(phys.keySet).toSeq.sorted
     if (affected.nonEmpty) {
       val oldRows =
         if (rebuildOld.isEmpty) None
-        else {
-          val schema = StructType(info.schema.get.fields :+
-            StructField("attr_bucket", IntegerType) :+ StructField("snapshot", StringType))
-          Some(spark.read.schema(schema).option("basePath", s"$root/index_$attr")
-            .parquet(rebuildOld.map(b => s"$root/index_$attr/snapshot=${phys(b)}/attr_bucket=$b"): _*)
-            .select(order.map(col): _*)
-            .join(removed.select(col(idColumn)).distinct(), Seq(idColumn), "left_anti")
-            .select(order.map(col): _*))
-        }
+        else Some(Snapshots.indexScan(spark, root, attr, info.readSchema,
+            rebuildOld.map(b => b -> phys(b)))
+          .join(removed.select(col(idColumn)).distinct(), Seq(idColumn), "left_anti")
+          .select(order.map(col): _*))
       val addedRows = addedIndexed.withColumn("attr_bucket", bucketOf(col(attr)))
         .select(order.map(col): _*)
       val union = oldRows.map(_.unionByName(addedRows)).getOrElse(addedRows)
@@ -846,18 +766,14 @@ object GeomTable {
         .write.mode("overwrite").partitionBy("attr_bucket")
         .parquet(s"$root/index_$attr/snapshot=$to")
     }
-    val outDir = new Path(s"$root/index_$attr/snapshot=$to")
-    val writtenBuckets: Set[Int] =
-      if (!f.exists(outDir)) Set.empty
-      else f.listStatus(outDir).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("attr_bucket=") =>
-          s.stripPrefix("attr_bucket=").toInt }.toSet
-    val sourcesMap: Map[Int, String] = (phys -- affected) ++ writtenBuckets.map(_ -> to).toMap
+    val sourcesMap: Map[Int, String] =
+      (phys -- affected) ++ Snapshots.listedBuckets(spark, root, to, attr).map(_ -> to)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     val srcs = node.putObject("sources")
     sourcesMap.toSeq.sortBy(_._1).foreach { case (b, s) => srcs.put(b.toString, s) }
-    Snapshots.writeString(f, indexSourcesPath(root, to, attr), mapper.writeValueAsString(node))
+    Snapshots.writeString(f, Snapshots.indexSourcesPath(root, to, attr),
+      mapper.writeValueAsString(node))
     Snapshots.writeString(f, marker, n.toString)
   }
 
@@ -867,7 +783,7 @@ object GeomTable {
   def referencedSnapshots(spark: SparkSession, root: String, id: String): Set[String] = {
     val dataRefs = ginfo(spark, root, id).sources.values.toSet
     val idxRefs = indexedColumns(spark, root, id).keys
-      .flatMap(a => indexPhysical(spark, root, id, a).values).toSet
+      .flatMap(a => Snapshots.indexPhysical(spark, root, id, a).values).toSet
     (dataRefs ++ idxRefs) - id
   }
 

@@ -1,7 +1,8 @@
 package graft.table
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /**
  * The snapshot-store mechanics both table kinds share (review r5 #7:
@@ -9,7 +10,9 @@ import org.apache.spark.sql.SparkSession
  * committed-snapshot listing and the GC fixpoint — a future fix to
  * either would have had to land in both or the table kinds silently
  * diverge). Layout contract: `<root>/_manifests/<id>.json` plus a
- * `<id>.committed` marker written LAST.
+ * `<id>.committed` marker written LAST. The secondary index layouts'
+ * markers, sources sidecars and planned reads live here for the same
+ * reason.
  */
 private[table] object Snapshots {
 
@@ -70,6 +73,105 @@ private[table] object Snapshots {
     out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     out.close()
   }
+
+  def readString(f: FileSystem, p: Path): String = {
+    val in = f.open(p)
+    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
+      java.nio.charset.StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  // ---- secondary index layouts ---------------------------------------
+  //
+  //   <root>/index_<attr>/snapshot=<id>/attr_bucket=<b>/part-*.parquet
+  //   <root>/_manifests/<id>.attr_<attr>.committed  marker: the bucket
+  //       count, then (point tables) the tier column
+  //   <root>/_manifests/<id>.attr_<attr>.sources    delta-rebuilt
+  //       layouts only: bucket -> the snapshot physically holding it
+  //
+  // The sidecar is NOT ".json": committed() recognizes a snapshot by the
+  // (<id>.committed, <id>.json) pair, and a .json sidecar would make the
+  // layout masquerade as a snapshot.
+
+  def indexMarkerPath(root: String, id: String, attr: String): String =
+    s"$root/_manifests/$id.attr_$attr.committed"
+
+  def indexSourcesPath(root: String, id: String, attr: String): String =
+    s"$root/_manifests/$id.attr_$attr.sources"
+
+  /** An index layout's commit-marker lines, read with one open: None
+    * while the layout is uncommitted, no lines for a layout committed
+    * before its marker recorded the bucket count. */
+  def indexMarker(spark: SparkSession, root: String, id: String,
+                  attr: String): Option[Seq[String]] =
+    try Some(readString(fs(spark, root), new Path(indexMarkerPath(root, id, attr)))
+      .trim.linesIterator.toSeq)
+    catch { case _: java.io.FileNotFoundException => None }
+
+  /** The bucket modulus a marker records, if any. */
+  def bucketsOf(marker: Seq[String]): Option[Int] = marker.headOption.map(_.toInt)
+
+  /** Committed index layouts of a snapshot: attribute -> bucket modulus,
+    * each marker read once. */
+  def indexedColumns(spark: SparkSession, root: String, id: String): Map[String, Option[Int]] = {
+    val f = fs(spark, root)
+    val rootPath = new Path(root)
+    if (!f.exists(rootPath)) Map.empty
+    else f.listStatus(rootPath).toSeq.map(_.getPath.getName)
+      .collect { case n if n.startsWith("index_") => n.stripPrefix("index_") }
+      .flatMap(a => indexMarker(spark, root, id, a).map(m => a -> bucketsOf(m)))
+      .toMap
+  }
+
+  /** bucket -> physical snapshot for a delta-rebuilt layout (its sources
+    * sidecar); None for a self-contained layout. */
+  private def indexSources(spark: SparkSession, root: String, id: String,
+                           attr: String): Option[Map[Int, String]] = {
+    val f = fs(spark, root)
+    val jp = new Path(indexSourcesPath(root, id, attr))
+    if (!f.exists(jp)) None
+    else {
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(f, jp))
+      val it = n.get("sources").fields()
+      val b = Map.newBuilder[Int, String]
+      while (it.hasNext) { val e = it.next(); b += e.getKey.toInt -> e.getValue.asText }
+      Some(b.result())
+    }
+  }
+
+  /** The bucket directories a layout's own snapshot directory holds. */
+  def listedBuckets(spark: SparkSession, root: String, id: String,
+                    attr: String): Seq[Int] = {
+    val f = fs(spark, root)
+    val dir = new Path(s"$root/index_$attr/snapshot=$id")
+    if (!f.exists(dir)) Seq.empty
+    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+      .collect { case s if s.startsWith("attr_bucket=") => s.stripPrefix("attr_bucket=").toInt }
+  }
+
+  /** bucket -> physical snapshot: the sources sidecar when the layout was
+    * delta-rebuilt, else its own directory listing (self-contained). */
+  def indexPhysical(spark: SparkSession, root: String, id: String,
+                    attr: String): Map[Int, String] =
+    indexSources(spark, root, id, attr)
+      .getOrElse(listedBuckets(spark, root, id, attr).map(_ -> id).toMap)
+
+  /** Index layout scan, planned like a snapshot read: a delta-rebuilt
+    * layout's leaves are the buckets its sources sidecar names, a
+    * self-contained layout's the bucket directories it holds. `columns`
+    * is the snapshot's read schema; attr_bucket follows it. */
+  def indexRead(spark: SparkSession, root: String, id: String, attr: String,
+                columns: StructType): DataFrame =
+    indexScan(spark, root, attr, columns, indexPhysical(spark, root, id, attr).toSeq)
+
+  /** A scan over the given index buckets (bucket -> physical holder). */
+  def indexScan(spark: SparkSession, root: String, attr: String, columns: StructType,
+                buckets: Seq[(Int, String)]): DataFrame =
+    SnapshotIndex.scan(spark, columns.add(StructField("attr_bucket", IntegerType)),
+      Seq("attr_bucket"),
+      buckets.sortBy(_._1).map { case (b, src) =>
+        (Seq(b), s"$root/index_$attr/snapshot=$src/attr_bucket=$b")
+      })
 
   private def fs(spark: SparkSession, p: String): FileSystem =
     new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)

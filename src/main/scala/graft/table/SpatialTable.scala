@@ -2,8 +2,10 @@ package graft.table
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, IntegerType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
 import graft.cells.Cells
 import graft.functions.StFunctions
 import graft.plans.ZQuery
@@ -28,6 +30,18 @@ import graft.plans.ZQuery
  * tasks — sorted by cell within partitions so Parquet row-group min/max
  * on `cell` enables range skipping inside each file.
  *
+ * Read path: every snapshot and index-layout read is planned from the
+ * parsed manifest, not from a listing. A [[SnapshotIndex]] holds the
+ * live partition keys with their values and physical directories
+ * (scoped snapshots resolve `sources`); the scan is a plain Parquet
+ * `HadoopFsRelation` over it with the manifest schema, so Catalyst's
+ * partition pruning, pushed filters, row-group skipping and
+ * SpatialFilterRule apply unchanged, and the only listing happens at
+ * execution, over the directories the partition filters keep. One
+ * manifest parse and one read of each index marker serve a planned
+ * query (`queryPlanned`). Legacy temporal manifests without a partition
+ * list read their directory.
+ *
  * Checkpoint-resume: the commit marker is written last; `write` with an
  * existing marker is a no-op (idempotent re-run), so a failed job simply
  * re-runs — outputs are deterministic given (input, snapshotId).
@@ -50,6 +64,10 @@ object SpatialTable {
    * REFERENCE; the map is kept flattened (values are always physical
    * holders, never another level of indirection), so chains of
    * mutations resolve in O(1).
+   *
+   * `keyed` is false only for legacy temporal manifests written before
+   * the partition list was recorded (the field is missing, not empty):
+   * those are the one kind of snapshot read by listing its directory.
    */
   /** A data-partition key: `cell_prefix` for plain layouts, the
     * (time_bin, cell_prefix) pair for temporal ones. `relpath` is the
@@ -69,6 +87,8 @@ object SpatialTable {
     /** The manifest sources-map key: plain prefixes keep the bare number
       * (round-4 format compatibility); temporal keys are "bin/prefix". */
     def sourceKey: String = bin.map(b => s"$b/$prefix").getOrElse(prefix.toString)
+    /** The partition-column values, in [[ManifestInfo.partitionCols]] order. */
+    def values: Seq[Any] = bin.toSeq :+ prefix
   }
 
   final case class ManifestInfo(snapshot: String, res: Int, prefixRes: Int, salts: Int,
@@ -78,7 +98,8 @@ object SpatialTable {
                                 sources: Map[Long, String],
                                 scoped: Boolean,
                                 tpartitions: Map[(Int, Long), Long] = Map.empty,
-                                tsources: Map[(Int, Long), String] = Map.empty) {
+                                tsources: Map[(Int, Long), String] = Map.empty,
+                                keyed: Boolean = true) {
     /** prefix -> physical holder for every live prefix (identity for
       * self-contained snapshots). Plain layouts only. */
     def physical: Map[Long, String] =
@@ -99,6 +120,8 @@ object SpatialTable {
       * discovery yields). */
     def readOrder: Seq[String] =
       schema.fieldNames.filterNot(partitionCols.contains).toSeq ++ partitionCols
+    /** The manifest schema in [[readOrder]]. */
+    def readSchema: StructType = StructType(readOrder.map(schema(_)))
   }
 
   /** Parse a snapshot's manifest (shared by every entry point). */
@@ -142,7 +165,8 @@ object SpatialTable {
       Option(n.get("period")).map(_.asText), Option(n.get("dtg")).map(_.asText),
       schema, parts, sources,
       scoped = Option(n.get("sources")).isDefined,
-      tpartitions = tparts, tsources = tsources)
+      tpartitions = tparts, tsources = tsources,
+      keyed = n.has("partitions"))
   }
 
   private def fs(spark: SparkSession, p: String): FileSystem =
@@ -216,36 +240,34 @@ object SpatialTable {
   }
 
   /**
-   * Full snapshot scan. Self-contained snapshots read their own data
-   * directory; snapshots produced by a scoped mutation resolve the
-   * manifest's `sources` map — each live prefix's directory is listed
-   * from the snapshot that physically holds it, under one shared
-   * basePath so cell_prefix stays a partition column (directory pruning
-   * and the z-range row-group skipping behave identically either way).
-   * The manifest schema is passed explicitly: no footer inference, and
-   * the partition columns keep their written types regardless of which
-   * value subset the listing happens to contain.
+   * Full snapshot scan, planned from the manifest. Every live partition
+   * key becomes one leaf of a [[SnapshotIndex]]: the key's directory
+   * under the snapshot that physically holds it (the snapshot itself,
+   * or the `sources` holder a scoped mutation inherited it from), with
+   * the key's values as the partition values. The manifest schema is
+   * the scan schema — no footer inference — and the partition columns
+   * keep their written types. Building the DataFrame lists nothing;
+   * the scan lists only the leaves its partition filters keep, so
+   * cell_prefix/time_bin pruning, pushed filters and the z-range
+   * row-group skipping apply as on a directory read. A fully deleted
+   * snapshot reads as an empty frame with the manifest schema. Legacy
+   * temporal manifests (no partition list) read their directory.
    */
-  def read(spark: SparkSession, root: String, snapshotId: String): DataFrame = {
-    val info = manifestInfo(spark, root, snapshotId)
-    if (!info.scoped) spark.read.parquet(s"$root/data/snapshot=$snapshotId")
-    else readResolved(spark, root, info)
-  }
+  def read(spark: SparkSession, root: String, snapshotId: String): DataFrame =
+    read(spark, root, manifestInfo(spark, root, snapshotId))
 
-  private def emptyOf(spark: SparkSession, info: ManifestInfo): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(info.readOrder.map(f => info.schema(f))))
+  /** Parsed-manifest overload: one manifest parse serves a planned query. */
+  private[graft] def read(spark: SparkSession, root: String, info: ManifestInfo): DataFrame =
+    if (!info.keyed) spark.read.parquet(s"$root/data/snapshot=${info.snapshot}")
+    else dataScan(spark, root, info, info.physicalKeys.toSeq)
 
-  private def readResolved(spark: SparkSession, root: String, info: ManifestInfo): DataFrame = {
-    val paths = info.physicalKeys.toSeq.sortBy(_._1.relpath)
-      .map { case (k, src) => s"$root/data/snapshot=$src/${k.relpath}" }
-    if (paths.isEmpty) emptyOf(spark, info) // fully-deleted snapshot: schema-only
-    else {
-      val withSnap = StructType(info.schema.fields :+ StructField("snapshot", StringType))
-      spark.read.schema(withSnap).option("basePath", s"$root/data").parquet(paths: _*)
-        .select(info.readOrder.map(col): _*)
-    }
-  }
+  /** A scan over the given live keys (key -> physical holder). */
+  private def dataScan(spark: SparkSession, root: String, info: ManifestInfo,
+                       keys: Seq[(PKey, String)]): DataFrame =
+    SnapshotIndex.scan(spark, info.readSchema, info.partitionCols,
+      keys.sortBy(_._1.relpath).map { case (k, src) =>
+        (k.values, s"$root/data/snapshot=$src/${k.relpath}")
+      })
 
   /**
    * Evolved-table view across ALL committed snapshots — the reference's
@@ -285,9 +307,9 @@ object SpatialTable {
   def readBBox(spark: SparkSession, root: String, snapshotId: String,
                bbox: (Double, Double, Double, Double),
                lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
-    val snap = manifest(spark, root, snapshotId)
-    prefixPrune(read(spark, root, snapshotId), bbox, snap.prefixRes)
-      .where(ZQuery.cellFilter(col("cell"), bbox, snap.res))
+    val info = manifestInfo(spark, root, snapshotId)
+    prefixPrune(read(spark, root, info), bbox, info.prefixRes)
+      .where(ZQuery.cellFilter(col("cell"), bbox, info.res))
       .where(col(lonCol).between(bbox._1, bbox._3) && col(latCol).between(bbox._2, bbox._4))
   }
 
@@ -383,16 +405,15 @@ object SpatialTable {
                    lonCol: String = "lon", latCol: String = "lat"): DataFrame = {
     require(endMillis > startMillis, s"empty interval: $startMillis..$endMillis")
     val info = manifestInfo(spark, root, snapshotId)
-    val snap = Snapshot(snapshotId, root, info.prefixRes, info.res, info.salts)
     val period = info.period
       .getOrElse(throw new IllegalStateException("not a temporal layout (no period in manifest)"))
     val dtgCol = info.dtg.get
     val p = graft.cells.BinnedTime.period(period)
     val b0 = graft.cells.BinnedTime.toBinned(p, startMillis).bin.toInt
     val b1 = graft.cells.BinnedTime.toBinned(p, endMillis - 1).bin.toInt
-    prefixPrune(read(spark, root, snapshotId), bbox, snap.prefixRes)
+    prefixPrune(read(spark, root, info), bbox, info.prefixRes)
       .where(col("time_bin").between(b0, b1))
-      .where(ZQuery.cellFilter(col("cell"), bbox, snap.res))
+      .where(ZQuery.cellFilter(col("cell"), bbox, info.res))
       .where(col(lonCol).between(bbox._1, bbox._3) && col(latCol).between(bbox._2, bbox._4))
       .where(unix_millis(col(dtgCol).cast("timestamp")).between(startMillis, endMillis - 1))
   }
@@ -429,8 +450,14 @@ object SpatialTable {
   def queryCql(spark: SparkSession, root: String, snapshotId: String, cql: String,
                lonCol: String = "lon", latCol: String = "lat",
                idColumn: String = "id",
-               props: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame = {
-    val df = read(spark, root, snapshotId)
+               props: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame =
+    queryCql(spark, root, manifestInfo(spark, root, snapshotId), cql, lonCol, latCol,
+      idColumn, props)
+
+  private def queryCql(spark: SparkSession, root: String, info: ManifestInfo, cql: String,
+                       lonCol: String, latCol: String, idColumn: String,
+                       props: Map[String, org.apache.spark.sql.Column]): DataFrame = {
+    val df = read(spark, root, info)
     graft.plans.Cql.filter(df, cql, geomDefaults(df, lonCol, latCol) ++ props, idColumn)
   }
 
@@ -450,7 +477,7 @@ object SpatialTable {
   def writeAttributeIndex(spark: SparkSession, root: String, snapshotId: String,
                           attrCol: String, buckets: Int = 16,
                           tierCol: Option[String] = None): Unit = {
-    val marker = s"$root/_manifests/$snapshotId.attr_$attrCol.committed"
+    val marker = Snapshots.indexMarkerPath(root, snapshotId, attrCol)
     val f = fs(spark, root)
     if (f.exists(new Path(marker))) return // resume: done
     val data = read(spark, root, snapshotId)
@@ -484,28 +511,13 @@ object SpatialTable {
     * (a wrong modulus silently finds nothing). */
   def indexBuckets(spark: SparkSession, root: String, snapshotId: String,
                    attrCol: String): Option[Int] =
-    indexMarker(spark, root, snapshotId, attrCol).flatMap(_.headOption).map(_.toInt)
+    Snapshots.indexMarker(spark, root, snapshotId, attrCol).flatMap(Snapshots.bucketsOf)
 
   /** The tier column an index layout was written with (the second marker
     * line), if any — mutation rebuilds must reuse it. */
   def indexTier(spark: SparkSession, root: String, snapshotId: String,
                 attrCol: String): Option[String] =
-    indexMarker(spark, root, snapshotId, attrCol).flatMap(_.lift(1))
-
-  private def indexMarker(spark: SparkSession, root: String, snapshotId: String,
-                          attrCol: String): Option[Seq[String]] = {
-    val marker = new Path(s"$root/_manifests/$snapshotId.attr_$attrCol.committed")
-    val f = fs(spark, root)
-    if (!f.exists(marker)) None
-    else {
-      val in = f.open(marker)
-      val text = try {
-        new String(org.apache.commons.io.IOUtils.toByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-      } finally in.close()
-      if (text.isEmpty) None else Some(text.linesIterator.toSeq)
-    }
-  }
+    Snapshots.indexMarker(spark, root, snapshotId, attrCol).flatMap(_.lift(1))
 
   /** Equality/range scan through the attribute index: bucket pruning
     * applies for equality (the hash bucket is known); range predicates
@@ -513,7 +525,7 @@ object SpatialTable {
   def readByAttribute(spark: SparkSession, root: String, snapshotId: String,
                       attrCol: String, value: Any, buckets: Int = 0): DataFrame = {
     val b = if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, attrCol)
-    val idx = indexRead(spark, root, snapshotId, attrCol)
+    val idx = indexRead(spark, root, manifestInfo(spark, root, snapshotId), attrCol)
     val pruned = b match {
       case Some(n) => idx.where(col("attr_bucket") ===
         pmod(xxhash64(typedLit(idx, attrCol, value)), lit(n)).cast("int"))
@@ -531,8 +543,12 @@ object SpatialTable {
     lit(value).cast(idx.schema(targetCol).dataType)
 
   def readAttributeRange(spark: SparkSession, root: String, snapshotId: String,
-                         attrCol: String, lo: Any, hi: Any): DataFrame = {
-    val idx = indexRead(spark, root, snapshotId, attrCol)
+                         attrCol: String, lo: Any, hi: Any): DataFrame =
+    readAttributeRange(spark, root, manifestInfo(spark, root, snapshotId), attrCol, lo, hi)
+
+  private def readAttributeRange(spark: SparkSession, root: String, info: ManifestInfo,
+                                 attrCol: String, lo: Any, hi: Any): DataFrame = {
+    val idx = indexRead(spark, root, info, attrCol)
     // cast the bounds to the column's type so a string "10" against a
     // BIGINT column compares numerically (same hazard typedLit guards)
     idx.where(col(attrCol).between(typedLit(idx, attrCol, lo), typedLit(idx, attrCol, hi)))
@@ -615,10 +631,14 @@ object SpatialTable {
                    idColumn: String = "id", dtgColumn: Option[String] = Some("dtg"),
                    props: Map[String, org.apache.spark.sql.Column] = Map.empty): DataFrame = {
     import graft.plans.StrategyDecider
-    // a layout is plannable only once its COMMIT MARKER exists — a
-    // crashed index write leaves a data directory the planner must
-    // never route through (the pre-index full scan stays correct)
-    val indexed: Set[String] = indexedColumns(spark, root, snapshotId).keySet
+    // ONE manifest parse and one read of each index marker serve the
+    // whole planned query. A layout is plannable only once its COMMIT
+    // MARKER exists — a crashed index write leaves a data directory the
+    // planner must never route through (the pre-index full scan stays
+    // correct)
+    val info = manifestInfo(spark, root, snapshotId)
+    val indexes = indexedColumns(spark, root, snapshotId)
+    val indexed: Set[String] = indexes.keySet
     val d = StrategyDecider.decide(cql, idColumn, indexed - idColumn,
       indexed.contains(idColumn), dtgColumn)
     def residual(df: DataFrame): DataFrame = d.residual match {
@@ -628,16 +648,16 @@ object SpatialTable {
     }
     d.strategy match {
       case StrategyDecider.IdLookup(vs) =>
-        residual(readByIds(spark, root, snapshotId, idColumn, vs))
+        residual(readByIds(spark, root, info, idColumn, vs, indexes(idColumn)))
       case StrategyDecider.AttrEquals(a, vs) =>
         // ONE scan with an OR of per-value (bucket, equality) conjuncts
         // (readByIds generalizes to any indexed column) — a per-value
         // union would duplicate rows for repeated or cast-equal values
-        residual(readByIds(spark, root, snapshotId, a, vs.distinct))
+        residual(readByIds(spark, root, info, a, vs.distinct, indexes(a)))
       case StrategyDecider.AttrRange(a, lo, hi) =>
-        residual(readAttributeRange(spark, root, snapshotId, a, lo, hi))
+        residual(readAttributeRange(spark, root, info, a, lo, hi))
       case StrategyDecider.ZScan =>
-        queryCql(spark, root, snapshotId, cql, lonCol, latCol, idColumn, props)
+        queryCql(spark, root, info, cql, lonCol, latCol, idColumn, props)
     }
   }
 
@@ -657,23 +677,33 @@ object SpatialTable {
     * match nothing. */
   def readByIds(spark: SparkSession, root: String, snapshotId: String,
                 idCol: String, values: Seq[Any], buckets: Int = 0): DataFrame = {
+    readByIds(spark, root, manifestInfo(spark, root, snapshotId), idCol, values,
+      if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, idCol))
+  }
+
+  /** Parsed-manifest overload: `probe` is the modulus the lookup hashes
+    * with. */
+  private def readByIds(spark: SparkSession, root: String, info: ManifestInfo,
+                        idCol: String, values: Seq[Any], probe: Option[Int]): DataFrame = {
     require(values.nonEmpty, "readByIds needs at least one id")
-    val idx = indexRead(spark, root, snapshotId, idCol)
+    val idx = indexRead(spark, root, info, idCol)
     if (values.size > IdPredicateLimit) {
-      // render + cast through the column's own type: matches the
-      // typedLit hashing contract below, and ids are strings/integrals
-      // in practice (the reference's feature ids are strings)
+      // the probe frame holds the ids in the column's own type, each
+      // value cast the way typedLit casts a literal probe — never via
+      // its string rendering, which binary ids (and timestamps rendered
+      // in another zone) do not survive
       val dt = idx.schema(idCol).dataType
-      val rows = values.distinct.map(v => Row(if (v == null) null else v.toString))
+      val tz = Some(spark.conf.get("spark.sql.session.timeZone"))
+      val rows = values.distinct.map { v =>
+        Row(CatalystTypeConverters.convertToScala(Cast(Literal(v), dt, tz).eval(), dt))
+      }
       val ids = spark.createDataFrame(spark.sparkContext.parallelize(rows, 1),
-        StructType(Seq(StructField("__graft_idval", StringType))))
-        .select(col("__graft_idval").cast(dt).as(idCol))
-      return readByIdsDf(spark, root, snapshotId, idCol, ids, buckets)
+        StructType(Seq(StructField(idCol, dt))))
+      return readByIdsDf(idx, idCol, ids, probe)
     }
-    val b = if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, idCol)
     val pred = values.map { v =>
       val eq = col(idCol) === lit(v)
-      b match {
+      probe match {
         case Some(n) =>
           col("attr_bucket") === pmod(xxhash64(typedLit(idx, idCol, v)), lit(n)).cast("int") && eq
         case None => eq
@@ -689,8 +719,13 @@ object SpatialTable {
     * used, so every join key pair is exact. */
   def readByIdsDf(spark: SparkSession, root: String, snapshotId: String,
                   idCol: String, ids: DataFrame, buckets: Int = 0): DataFrame = {
-    val b = if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, idCol)
-    val idx = indexRead(spark, root, snapshotId, idCol)
+    val idx = indexRead(spark, root, manifestInfo(spark, root, snapshotId), idCol)
+    readByIdsDf(idx, idCol, ids,
+      if (buckets > 0) Some(buckets) else indexBuckets(spark, root, snapshotId, idCol))
+  }
+
+  private def readByIdsDf(idx: DataFrame, idCol: String, ids: DataFrame,
+                          b: Option[Int]): DataFrame = {
     val dt = idx.schema(idCol).dataType
     val probe = ids.select(col(idCol).cast(dt).as(idCol)).distinct()
     val joined = b match {
@@ -735,17 +770,8 @@ object SpatialTable {
   /** Secondary index layouts committed for a snapshot: column name ->
     * bucket count from the commit marker. */
   def indexedColumns(spark: SparkSession, root: String,
-                     snapshotId: String): Map[String, Option[Int]] = {
-    val f = fs(spark, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Map.empty
-    else f.listStatus(rootPath).toSeq
-      .map(_.getPath.getName)
-      .collect { case n if n.startsWith("index_") => n.stripPrefix("index_") }
-      .filter(a => f.exists(new Path(s"$root/_manifests/$snapshotId.attr_$a.committed")))
-      .map(a => a -> indexBuckets(spark, root, snapshotId, a))
-      .toMap
-  }
+                     snapshotId: String): Map[String, Option[Int]] =
+    Snapshots.indexedColumns(spark, root, snapshotId)
 
   /**
    * Copy-on-write snapshot rewrite — the engine's single mutation
@@ -775,7 +801,7 @@ object SpatialTable {
     // DERIVED — it must re-derive from the (possibly updated) dtg, never
     // survive as a stale data column, and the new snapshot must keep the
     // time_bin directory partitioning + its period/dtg manifest fields
-    val base = read(spark, root, fromSnapshot).drop("cell", "cell_prefix", "salt", "time_bin")
+    val base = read(spark, root, old).drop("cell", "cell_prefix", "salt", "time_bin")
     val snap = old.period match {
       case Some(p) =>
         writeTemporal(spark, transform(base), root, toSnapshot, idCol, lonCol, latCol,
@@ -831,78 +857,10 @@ object SpatialTable {
       unix_millis(col(info.dtg.get).cast("timestamp")), lit(info.period.get)))
   }
 
-  private def readFileString(f: FileSystem, p: Path): String = {
-    val in = f.open(p)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  // NOT ".json": snapshots() recognizes a snapshot by the
-  // (<id>.committed, <id>.json) pair, and index layouts commit under
-  // markers named <snapshot>.attr_<col>.committed — a .json sidecar
-  // there would make the layout masquerade as a snapshot
-  private def indexJsonPath(root: String, id: String, attr: String) =
-    s"$root/_manifests/$id.attr_$attr.sources"
-
-  /** attr_bucket -> physical snapshot for an index layout: the sources
-    * sidecar when the layout was delta-rebuilt, else its own directory
-    * listing (self-contained). */
-  private def indexPhysical(spark: SparkSession, root: String, id: String,
-                            attr: String): Map[Int, String] = {
-    val f = fs(spark, root)
-    val jp = new Path(indexJsonPath(root, id, attr))
-    if (f.exists(jp)) {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readFileString(f, jp))
-      val it = n.get("sources").fields()
-      val b = Map.newBuilder[Int, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey.toInt -> e.getValue.asText }
-      b.result()
-    } else {
-      val dir = new Path(s"$root/index_$attr/snapshot=$id")
-      if (!f.exists(dir)) Map.empty
-      else f.listStatus(dir).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("attr_bucket=") =>
-          s.stripPrefix("attr_bucket=").toInt -> id }
-        .toMap
-    }
-  }
-
-  /** Resolution-aware index layout scan (the [[readResolved]] analog for
-    * `index_<attr>` layouts): plain directory read for self-contained
-    * layouts, per-bucket path resolution for delta-rebuilt ones. */
-  private def indexRead(spark: SparkSession, root: String, id: String,
-                        attr: String): DataFrame = {
-    val f = fs(spark, root)
-    if (!f.exists(new Path(indexJsonPath(root, id, attr)))) {
-      // explicit schema, never inference: an index built on an EMPTY
-      // snapshot is a directory with no parquet files, and inference
-      // would crash every later lookup instead of answering empty
-      // (review r5b #1 — found on the GeomTable copy, same hazard here)
-      val info = manifestInfo(spark, root, id)
-      val order = info.readOrder :+ "attr_bucket"
-      spark.read
-        .schema(StructType(info.schema.fields :+ StructField("attr_bucket", IntegerType)))
-        .parquet(s"$root/index_$attr/snapshot=$id")
-        .select(order.map(col): _*)
-    } else {
-      val info = manifestInfo(spark, root, id)
-      val order = info.readOrder :+ "attr_bucket"
-      val phys = indexPhysical(spark, root, id, attr)
-      if (phys.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-          StructType(info.readOrder.map(c => info.schema(c)) :+
-            StructField("attr_bucket", IntegerType)))
-      else {
-        val schema = StructType(info.schema.fields :+
-          StructField("attr_bucket", IntegerType) :+ StructField("snapshot", StringType))
-        val paths = phys.toSeq.sortBy(_._1)
-          .map { case (b, src) => s"$root/index_$attr/snapshot=$src/attr_bucket=$b" }
-        spark.read.schema(schema).option("basePath", s"$root/index_$attr").parquet(paths: _*)
-          .select(order.map(col): _*)
-      }
-    }
-  }
+  /** Index layout scan, planned like [[read]] (Snapshots.indexRead). */
+  private[graft] def indexRead(spark: SparkSession, root: String, info: ManifestInfo,
+                               attr: String): DataFrame =
+    Snapshots.indexRead(spark, root, info.snapshot, attr, info.readSchema)
 
   /**
    * Delta-scoped secondary-index rebuild: only the attr_buckets where a
@@ -916,31 +874,27 @@ object SpatialTable {
                                  attr: String, removed: DataFrame, addedIndexed: DataFrame,
                                  idCol: String): Unit = {
     val f = fs(spark, root)
-    val marker = s"$root/_manifests/$to.attr_$attr.committed"
+    val marker = Snapshots.indexMarkerPath(root, to, attr)
     if (f.exists(new Path(marker))) return // resume: done
-    val n = indexBuckets(spark, root, from, attr).getOrElse(16)
-    val tier = indexTier(spark, root, from, attr)
+    val fromMarker = Snapshots.indexMarker(spark, root, from, attr)
+    val n = fromMarker.flatMap(Snapshots.bucketsOf).getOrElse(16)
+    val tier = fromMarker.flatMap(_.lift(1))
     def bucketOf(c: org.apache.spark.sql.Column) = pmod(xxhash64(c), lit(n)).cast("int")
     val affected: Set[Int] =
       removed.select(bucketOf(col(attr)).as("b"))
         .unionByName(addedIndexed.select(bucketOf(col(attr)).as("b")))
         .distinct().collect().map(_.getInt(0)).toSet
-    val phys = indexPhysical(spark, root, from, attr)
+    val phys = Snapshots.indexPhysical(spark, root, from, attr)
     val info = manifestInfo(spark, root, from)
     val order = info.readOrder :+ "attr_bucket"
     val rebuildOld = affected.intersect(phys.keySet).toSeq.sorted
     if (affected.nonEmpty) {
       val oldRows =
         if (rebuildOld.isEmpty) None
-        else {
-          val schema = StructType(info.schema.fields :+
-            StructField("attr_bucket", IntegerType) :+ StructField("snapshot", StringType))
-          Some(spark.read.schema(schema).option("basePath", s"$root/index_$attr")
-            .parquet(rebuildOld.map(b => s"$root/index_$attr/snapshot=${phys(b)}/attr_bucket=$b"): _*)
-            .select(order.map(col): _*)
-            .join(removed.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
-            .select(order.map(col): _*))
-        }
+        else Some(Snapshots.indexScan(spark, root, attr, info.readSchema,
+            rebuildOld.map(b => b -> phys(b)))
+          .join(removed.select(col(idCol)).distinct(), Seq(idCol), "left_anti")
+          .select(order.map(col): _*))
       val addedRows = addedIndexed.withColumn("attr_bucket", bucketOf(col(attr)))
         .select(order.map(col): _*)
       val union = oldRows.map(_.unionByName(addedRows)).getOrElse(addedRows)
@@ -952,19 +906,13 @@ object SpatialTable {
     }
     // which affected buckets actually got files (an emptied bucket is
     // simply dropped from the map)?
-    val outDir = new Path(s"$root/index_$attr/snapshot=$to")
-    val writtenBuckets: Set[Int] =
-      if (!f.exists(outDir)) Set.empty
-      else f.listStatus(outDir).toSeq.map(_.getPath.getName)
-        .collect { case s if s.startsWith("attr_bucket=") =>
-          s.stripPrefix("attr_bucket=").toInt }.toSet
     val sourcesMap: Map[Int, String] =
-      (phys -- affected) ++ writtenBuckets.map(_ -> to).toMap
+      (phys -- affected) ++ Snapshots.listedBuckets(spark, root, to, attr).map(_ -> to)
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
     val srcs = node.putObject("sources")
     sourcesMap.toSeq.sortBy(_._1).foreach { case (b, s) => srcs.put(b.toString, s) }
-    writeString(f, indexJsonPath(root, to, attr), mapper.writeValueAsString(node))
+    writeString(f, Snapshots.indexSourcesPath(root, to, attr), mapper.writeValueAsString(node))
     writeString(f, marker, (n.toString +: tier.toSeq).mkString("\n"))
   }
 
@@ -1007,12 +955,8 @@ object SpatialTable {
     val userFields = info.schema.fields.filterNot(fld => DerivedCols(fld.name))
     def emptyUser = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
       StructType(userFields))
-    val withSnap = StructType(info.schema.fields :+ StructField("snapshot", StringType))
     def srcRows(keys: Seq[PKey]): DataFrame =
-      if (keys.isEmpty) emptyUser
-      else spark.read.schema(withSnap).option("basePath", s"$root/data")
-        .parquet(keys.sortBy(_.relpath)
-          .map(k => s"$root/data/snapshot=${srcPhys(k)}/${k.relpath}"): _*)
+      dataScan(spark, root, info, keys.map(k => k -> srcPhys(k)))
         .select(userFields.toSeq.map(fld => col(fld.name)): _*)
     def index(df: DataFrame): DataFrame = withDerived(info, df, idCol, lonCol, latCol)
 
@@ -1104,8 +1048,8 @@ object SpatialTable {
       indexedColumns(spark, root, from).keys.toSeq.sorted.foreach { a =>
         rebuildIndexScoped(spark, root, from, to, a, removedC, addedIndexed, idCol)
       }
-      TableStats.applyMutationDelta(spark, root, from, to, removedC,
-        addedUser.getOrElse(emptyUser), lonCol, latCol)
+      TableStats.applyMutationDelta(spark, root, from, to, removedC, addedIndexed,
+        lonCol, latCol)
     } finally {
       removedC.unpersist()
       addedIndexed.unpersist()
@@ -1158,7 +1102,7 @@ object SpatialTable {
     if (!canScope(info))
       rewrite(spark, root, fromSnapshot, toSnapshot, remove, idCol, lonCol, latCol)
     else {
-      val src = read(spark, root, fromSnapshot)
+      val src = read(spark, root, info)
       val matched = src.where(cqlPred(src, cql, lonCol, latCol, idCol, props))
       commitScoped(spark, root, fromSnapshot, toSnapshot, keysIn(info, matched), remove,
         removed = matched, addedUser = None, mayMove = false,
@@ -1189,7 +1133,7 @@ object SpatialTable {
       val matched =
         if (indexedColumns(spark, root, fromSnapshot).contains(idCol))
           readByIdsDf(spark, root, fromSnapshot, idCol, idsOnly).drop("attr_bucket")
-        else read(spark, root, fromSnapshot).join(idsOnly, Seq(idCol), "left_semi")
+        else read(spark, root, info).join(idsOnly, Seq(idCol), "left_semi")
       commitScoped(spark, root, fromSnapshot, toSnapshot, keysIn(info, matched), remove,
         removed = matched, addedUser = None, mayMove = false,
         idCol, lonCol, latCol, partitions = 32)
@@ -1223,7 +1167,7 @@ object SpatialTable {
     if (!canScope(info))
       rewrite(spark, root, fromSnapshot, toSnapshot, update, idCol, lonCol, latCol)
     else {
-      val src = read(spark, root, fromSnapshot)
+      val src = read(spark, root, info)
       val matched = src.where(cqlPred(src, cql, lonCol, latCol, idCol, props))
       // every row in `matched` matches — the added versions apply the
       // sets unconditionally (same values commitScoped's transform
@@ -1300,7 +1244,7 @@ object SpatialTable {
             // id-index SEMI-JOIN — no driver id list, no size ceiling
             // (ADVICE r4: the 10k OR-chain risked codegen fallback)
             val n = incoming.count()
-            if (n == 0) read(spark, root, fromSnapshot).limit(0)
+            if (n == 0) read(spark, root, info).limit(0)
             else if (n <= math.min(idLookupLimit, IdPredicateLimit.toLong)) {
               val vals = incoming.select(idCol).distinct().collect().map(_.get(0)).toSeq
               readByIds(spark, root, fromSnapshot, idCol, vals).drop("attr_bucket")
@@ -1308,7 +1252,7 @@ object SpatialTable {
               readByIdsDf(spark, root, fromSnapshot, idCol, incoming.select(idCol))
                 .drop("attr_bucket")
           } else
-            read(spark, root, fromSnapshot)
+            read(spark, root, info)
               .join(incoming.select(idCol).distinct(), Seq(idCol), "left_semi")
         val pOld = keysIn(info, oldRows)
         // new rows' homes are known without touching the table at all —
@@ -1427,7 +1371,7 @@ object SpatialTable {
     val i = manifestInfo(spark, root, id)
     val dataRefs = (i.sources.values ++ i.tsources.values).toSet
     val idxRefs = indexedColumns(spark, root, id).keys
-      .flatMap(a => indexPhysical(spark, root, id, a).values).toSet
+      .flatMap(a => Snapshots.indexPhysical(spark, root, id, a).values).toSet
     (dataRefs ++ idxRefs) - id
   }
 
