@@ -120,6 +120,39 @@ object Cells {
     (0 to k).flatMap(ring(cell, _)).distinct.toArray
 
   /**
+   * The distinct resolution-`r` parents of `disk(cell, k)`, found
+   * without enumerating the (2k+1)^2 disk: the disk is a longitude
+   * interval (cyclic) times a latitude interval clamped at the poles,
+   * and a parent grid coarser by 2^d maps each interval to the floor
+   * divisions of its ends. A longitude span reaching 2^r parents covers
+   * the whole row, which also handles disks wider than the world.
+   */
+  def diskParents(cell: Long, k: Int, r: Int): Array[Long] = {
+    val res0 = res(cell)
+    require(r <= res0, s"target res $r finer than cell res $res0")
+    val n = 1L << res0
+    val d = res0 - r
+    val m = 1L << r
+    val cx = ix(cell)
+    val cy = iy(cell)
+    // arithmetic shifts floor-divide the unwrapped ends; floorMod wraps
+    val x0 = (cx - k) >> d
+    val nx = math.min(m, ((cx + k) >> d) - x0 + 1)
+    val y0 = math.max(0L, cy - k) >> d
+    val y1 = math.min(n - 1, cy + k) >> d
+    val out = new Array[Long]((nx * (y1 - y0 + 1)).toInt)
+    var i = 0
+    var x = 0L
+    while (x < nx) {
+      val px = java.lang.Math.floorMod(x0 + x, m)
+      var y = y0
+      while (y <= y1) { out(i) = pack(r, px, y); i += 1; y += 1 }
+      x += 1
+    }
+    out
+  }
+
+  /**
    * Cells at resolution r whose envelope intersects the given lon/lat
    * bbox, capped at `maxCells` (coarsens by using parent resolution when
    * the cover would explode — the analog of the reference's scan-range

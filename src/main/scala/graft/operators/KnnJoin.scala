@@ -18,11 +18,12 @@ import graft.functions.StFunctions
  * terminate when no unvisited cell can be closer. Re-expressed for BSP
  * execution with a bounded number of whole-fleet passes:
  *
- *   seed:    one density estimate (a count) picks the initial disk
- *            radius so the expected candidate count is ~4k — most
- *            queries resolve in the FIRST candidate pass instead of
- *            log2(maxRings) doubling rounds, each of which is a full
- *            scan of the point table;
+ *   seed:    one density estimate (the point count; table metadata in
+ *            [[forTable]]) picks the initial disk radius so the
+ *            expected candidate count is ~4k — most queries resolve in
+ *            the FIRST candidate pass instead of log2(maxRings) doubling
+ *            rounds, each of which is a pass over the point table (over
+ *            a table, only the stored prefixes its disks reach);
  *   growth:  per-query state — only queries still short of k rejoin the
  *            next round with a doubled ring; satisfied queries carry
  *            their observed kth distance out of the loop;
@@ -45,17 +46,75 @@ object KnnJoin {
   private val MetersPerDegLat = 110574.0
   private val MetersPerDegLon = 111320.0
 
-  /** Test instrumentation: growth rounds (candidate passes before the
-    * final exact pass) of the most recent apply() on this driver. */
-  @volatile private[operators] var lastGrowthRounds: Int = 0
+  /** What one search did, as data: its growth rounds (candidate passes
+    * before the final exact pass) and, for each pass in order — the
+    * growth rounds, then the final pass — how many of the snapshot's
+    * `prefixesTotal` stored prefixes its point scan kept. `prefixesKept`
+    * is empty for a search whose points carry no stored prefixes (a raw
+    * DataFrame, or a table whose prefixes are finer than the kNN grid). */
+  final case class Search(growthRounds: Int, prefixesKept: Seq[Int], prefixesTotal: Int)
+
+  @volatile private var last = Search(0, Nil, 0)
+
+  /** The most recent search on this driver. */
+  def lastSearch: Search = last
+
+  /** Growth rounds of the most recent search on this driver. */
+  private[operators] def lastGrowthRounds: Int = last.growthRounds
+
+  /** The stored partition prefixes of a table scan: the `cell_prefix`
+    * resolution and every live prefix of the snapshot. */
+  private final case class Prefixes(res: Int, live: Set[Long])
+
+  /** Proof: observed kth distance -> proven disk radius. Any point
+    * outside disk radius ceil(d_k / metricCellWidth(lat_q)) + 1 is
+    * provably farther than the observed d_k. */
+  private val provenRing = udf { (dk: Double, qlat: Double, res: Int, maxRings: Int, planar: Boolean) =>
+    val latW = Cells.latWidth(res)
+    val lonW = Cells.lonWidth(res)
+    // metric width of one cell step: north-south is latitude-constant;
+    // east-west shrinks with cos(lat) — take the tighter requirement
+    // over the band the disk can reach
+    val (stepNS, stepEW) =
+      if (planar) (latW, lonW) // degree metric: grid steps are exact
+      else {
+        val bandLat = math.min(89.0, math.abs(qlat) + latW * (maxRings + 1))
+        (latW * MetersPerDegLat,
+          lonW * MetersPerDegLon * math.cos(math.toRadians(bandLat)))
+      }
+    val need = math.max(
+      math.ceil(dk / stepNS),
+      math.ceil(dk / math.max(1e-9, stepEW))).toInt + 1
+    math.min(maxRings, math.max(1, need))
+  }
+
+  private val diskParents = udf((cell: Long, k: Int, r: Int) => Cells.diskParents(cell, k, r))
 
   /**
    * kNN over a [[graft.table.SpatialTable]] snapshot: identical search,
-   * but the density seed comes from table METADATA — the cached stats
-   * count, falling back to the manifest's per-prefix row totals — so no
-   * count() pass over the point table runs before the search (VERDICT
-   * r3 "What's wrong" #2: at 100 TB that pass is a full scan to
-   * estimate one constant the manifest already knows).
+   * reading only what the ring disks reach.
+   *
+   *   seed:    the density seed comes from table METADATA — the cached
+   *            stats count, else the manifest's row total over its
+   *            partitions, for the plain and the temporal layout alike —
+   *            so no count() pass over the point table runs before the
+   *            search (VERDICT r3 "What's wrong" #2: at 100 TB that pass
+   *            is a full scan to estimate one constant the manifest
+   *            already knows). Only a legacy temporal manifest without a
+   *            partition list, and no stats, still counts.
+   *   pruning: each growth round scans only the stored `cell_prefix`
+   *            partitions that the active queries' disks reach, and the
+   *            final exact pass only those of the proven disks, so
+   *            [[graft.table.SnapshotIndex]] lists and reads just those
+   *            leaves. This is exact: a candidate's cell lies in the
+   *            disk, and its stored prefix is that cell's parent at the
+   *            manifest's `prefixRes` (`Cells.diskParents`). It applies
+   *            when `res >= prefixRes` and the manifest lists its
+   *            partitions; otherwise every pass scans the snapshot.
+   *            `lonCol`/`latCol` must be the columns the table was
+   *            written with, which its cells were derived from.
+   *
+   * [[lastSearch]] records the rounds and the prefixes kept per pass.
    */
   def forTable(spark: SparkSession, root: String, snapshotId: String,
                lonCol: String, latCol: String,
@@ -75,10 +134,13 @@ object KnnJoin {
           s"(${s.deleted} rows deleted since last collect) — consider TableStats.collect")
     }
     val info = SpatialTable.manifestInfo(spark, root, snapshotId)
-    val n = st.map(_.count).orElse(Some(info.partitions.values.sum).filter(_ > 0))
-    apply(spark, SpatialTable.read(spark, root, info), lonCol, latCol,
-      queries, qidCol, qLonCol, qLatCol, k, res, maxRings, metric, tieBreakCols,
-      pointCount = n)
+    val n = st.map(_.count).orElse(Some(info.rows).filter(_ => info.keyed))
+    val prefixes =
+      if (info.keyed && res >= info.prefixRes)
+        Some(Prefixes(info.prefixRes, info.physicalKeys.keys.map(_.prefix).toSet))
+      else None
+    search(spark, SpatialTable.read(spark, root, info), lonCol, latCol,
+      queries, qidCol, qLonCol, qLatCol, k, res, maxRings, metric, tieBreakCols, n, prefixes)
   }
 
   def apply(spark: SparkSession,
@@ -87,7 +149,16 @@ object KnnJoin {
             k: Int, res: Int, maxRings: Int = 64,
             metric: String = "haversine",
             tieBreakCols: Seq[String] = Nil,
-            pointCount: Option[Long] = None): DataFrame = {
+            pointCount: Option[Long] = None): DataFrame =
+    search(spark, points, lonCol, latCol, queries, qidCol, qLonCol, qLatCol,
+      k, res, maxRings, metric, tieBreakCols, pointCount, prefixes = None)
+
+  private def search(spark: SparkSession,
+                     points: DataFrame, lonCol: String, latCol: String,
+                     queries: DataFrame, qidCol: String, qLonCol: String, qLatCol: String,
+                     k: Int, res: Int, maxRings: Int, metric: String,
+                     tieBreakCols: Seq[String], pointCount: Option[Long],
+                     prefixes: Option[Prefixes]): DataFrame = {
     require(metric == "haversine" || metric == "planar", s"unknown metric $metric")
     val planar = metric == "planar"
     val tieBreak = if (tieBreakCols.nonEmpty) tieBreakCols else Seq(lonCol, latCol)
@@ -104,10 +175,14 @@ object KnnJoin {
     val pts = points.withColumn("__pcell", StFunctions.stCellOfXY(col(lonCol), col(latCol), lit(res)))
     val qs = queries.withColumn("__qcell", StFunctions.stCellOfXY(col(qLonCol), col(qLatCol), lit(res)))
 
-    def candidates(ringOf: DataFrame): DataFrame =
-      pts.join(
+    // a pass's candidates: the points of its disks, scanning only the
+    // stored prefixes those disks reach when the scan has them
+    def candidates(ringOf: DataFrame, kept: Seq[Long]): DataFrame = {
+      val scan = if (prefixes.isEmpty) pts else pts.where(col("cell_prefix").isin(kept: _*))
+      scan.join(
         broadcast(ringOf.withColumn("__cell", explode(StFunctions.stCellDisk(col("__qcell"), col("__ring"))))),
         col("__pcell") === col("__cell"))
+    }
 
     // -- density-seeded initial radius ---------------------------------
     // expected candidates in a (2r+1)^2 disk ~ 4k => r from the global
@@ -120,74 +195,81 @@ object KnnJoin {
     val ring0 = math.max(1, math.min(maxRings,
       math.ceil((math.sqrt(4.0 * k / math.max(perCell, 1e-12)) - 1) / 2).toInt))
 
+    // the disk a done query's final pass searches
+    val provenDisk = when(col("__capped") || col("__dk").isNull, lit(maxRings))
+      .otherwise(provenRing(col("__dk"), col(qLatCol), lit(res), lit(maxRings), lit(planar)))
+
+    // -- the one driver action per round -------------------------------
+    // Whether any query is still active and, for a table scan, the live
+    // stored prefixes of the disks the next pass searches: the growth
+    // disks of the active queries, or once none is active the proven
+    // disks of all. (active, prefix) pairs are made distinct within each
+    // state partition, so one job with no shuffle returns at most twice
+    // the prefix count per partition, whatever the query count.
+    def reach(state: DataFrame): (Boolean, Seq[Long]) = prefixes match {
+      case None => (!state.where(!col("__done")).isEmpty, Nil)
+      case Some(p) =>
+        import spark.implicits._
+        val pairs = state
+          .select(!col("__done"), explode(diskParents(col("__qcell"),
+            when(col("__done"), provenDisk).otherwise(col("__ring")), lit(p.res))))
+          .as[(Boolean, Long)].mapPartitions(_.toSet.iterator).collect().distinct
+        val active = pairs.exists(_._1)
+        (active, pairs.collect { case (a, prefix) if a == active && p.live(prefix) => prefix }.sorted.toSeq)
+    }
+
     // -- growth with per-query state AS A DATAFRAME ---------------------
     // state carries every query column plus (__ring, __dk, __capped,
     // __done). Each round: candidates for the still-active queries, a
-    // per-qid (count, kth-distance) aggregate, then ONE left join back —
-    // no driver-side qid map, no `isin` literal list, no per-round plan
-    // that grows with the number of satisfied queries. The driver sees
-    // only a remaining-count per round, so 10^5-10^6 query points stream
-    // through exactly like 10. localCheckpoint truncates the iterative
-    // lineage (same trick as iterative MLlib algorithms).
-    var state = qs
-      .withColumn("__ring", lit(ring0))
-      .withColumn("__dk", lit(null).cast("double"))
-      .withColumn("__capped", lit(false))
-      .withColumn("__done", lit(false))
-      .localCheckpoint()
+    // per-qid (count, kth-distance) aggregate, then ONE left join back
+    // against the broadcast aggregate — no driver-side qid map, no
+    // `isin` qid list, no per-round plan that grows with the number of
+    // satisfied queries. The driver sees only `reach` per round, so
+    // 10^5-10^6 query points stream through exactly like 10.
+    // localCheckpoint truncates the iterative lineage (same trick as
+    // iterative MLlib algorithms); the first one also keeps the caller's
+    // literal query columns out of every generated stage, so warm
+    // queries reuse compiled code. Each is lazy: the `reach` action
+    // right after it materializes it, one job fewer per checkpoint.
+    var state = qs.select(col("*"), lit(ring0).as("__ring"), lit(null).cast("double").as("__dk"),
+      lit(false).as("__capped"), lit(false).as("__done")).localCheckpoint(eager = false)
     var ring = ring0
-    var remaining = state.where(!col("__done")).count()
-    lastGrowthRounds = 0
-    while (remaining > 0) {
-      lastGrowthRounds += 1
-      val active = state.where(!col("__done"))
-      val stats = candidates(active).withColumn("__dist", distExpr)
+    var (remaining, kept) = reach(state)
+    val keptPerPass = Seq.newBuilder[Int]
+    var rounds = 0
+    while (remaining) {
+      rounds += 1
+      if (prefixes.nonEmpty) keptPerPass += kept.size
+      val stats = candidates(state.where(!col("__done")), kept).withColumn("__dist", distExpr)
         .withColumn("__rn", row_number().over(Window.partitionBy(qidCol).orderBy(col("__dist"))))
         .where(col("__rn") <= k)
         .groupBy(qidCol).agg(count(lit(1)).as("__n"), max("__dist").as("__dk_new"))
       val atCap = ring >= maxRings
       val nextRing = math.min(maxRings, ring * 2)
-      state = state.join(stats, Seq(qidCol), "left")
-        .withColumn("__sat", !col("__done") && coalesce(col("__n") >= k, lit(false)))
-        .withColumn("__dk", when(col("__sat"), col("__dk_new")).otherwise(col("__dk")))
+      val sat = !col("__done") && coalesce(col("__n") >= k, lit(false))
+      val done = col("__done") || sat || lit(atCap)
+      val updated = Map(
+        "__dk" -> when(sat, col("__dk_new")).otherwise(col("__dk")),
         // at the ring budget, short queries keep the maxRings disk
         // instead of disappearing (sparse-data semantics)
-        .withColumn("__capped", col("__capped") || (!col("__done") && !col("__sat") && lit(atCap)))
-        .withColumn("__done", col("__done") || col("__sat") || lit(atCap))
-        .withColumn("__ring", when(col("__done"), col("__ring")).otherwise(lit(nextRing)))
-        .drop("__n", "__dk_new", "__sat")
-        .localCheckpoint()
+        "__capped" -> (col("__capped") || (!col("__done") && !sat && lit(atCap))),
+        "__done" -> done,
+        "__ring" -> when(done, col("__ring")).otherwise(lit(nextRing)))
+      val joined = state.join(broadcast(stats), Seq(qidCol), "left")
+      state = joined.select(joined.columns.filterNot(Set("__n", "__dk_new"))
+        .map(c => updated.get(c).fold(joined(s"`$c`"))(_.as(c))): _*)
+        .localCheckpoint(eager = false)
       ring = nextRing
-      remaining = state.where(!col("__done")).count()
+      val r = reach(state)
+      remaining = r._1
+      kept = r._2
     }
+    if (prefixes.nonEmpty) keptPerPass += kept.size
+    last = Search(rounds, keptPerPass.result(), prefixes.fold(0)(_.live.size))
 
-    // -- proof: observed kth distance -> proven disk radius ------------
-    val latW = Cells.latWidth(res)
-    val lonW = Cells.lonWidth(res)
-    val provenRing = udf { (dk: Double, qlat: Double) =>
-      // metric width of one cell step: north-south is latitude-constant;
-      // east-west shrinks with cos(lat) — take the tighter requirement
-      // over the band the disk can reach
-      val (stepNS, stepEW) =
-        if (planar) (latW, lonW) // degree metric: grid steps are exact
-        else {
-          val bandLat = math.min(89.0, math.abs(qlat) + latW * (maxRings + 1))
-          (latW * MetersPerDegLat,
-            lonW * MetersPerDegLon * math.cos(math.toRadians(bandLat)))
-        }
-      val need = math.max(
-        math.ceil(dk / stepNS),
-        math.ceil(dk / math.max(1e-9, stepEW))).toInt + 1
-      math.min(maxRings, math.max(1, need))
-    }
-    val qsProven = state
-      .withColumn("__ring",
-        when(col("__capped") || col("__dk").isNull, lit(maxRings))
-          .otherwise(provenRing(col("__dk"), col(qLatCol))))
-      .drop("__dk", "__capped", "__done")
-
-    // -- final exact pass ----------------------------------------------
-    candidates(qsProven)
+    // -- final exact pass over the proven disks ------------------------
+    val qsProven = state.withColumn("__ring", provenDisk).drop("__dk", "__capped", "__done")
+    candidates(qsProven, kept)
       .withColumn("dist", distExpr)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(qidCol).orderBy(col("dist") +: tieBreak.map(col): _*)))

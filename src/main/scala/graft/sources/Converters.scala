@@ -193,7 +193,10 @@ object Converters {
       override def initialValue(): javax.xml.stream.XMLInputFactory = {
         val f = javax.xml.stream.XMLInputFactory.newInstance()
         // coalescing makes each text node ONE characters event (CDATA
-        // included), so "first text node" is well-defined below; DTD
+        // included), so "first text node" is well-defined below. XPath's
+        // data model merges adjacent text and CDATA the same way, and the
+        // DOM path's evaluator follows it: text() of <a>x<![CDATA[y]]></a>
+        // is "xy" on both paths, while a comment still splits text. DTD
         // support off like the DOM path's default hardening posture
         f.setProperty(javax.xml.stream.XMLInputFactory.IS_COALESCING, java.lang.Boolean.TRUE)
         f.setProperty(javax.xml.stream.XMLInputFactory.SUPPORT_DTD, java.lang.Boolean.FALSE)

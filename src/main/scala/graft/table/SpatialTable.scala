@@ -104,6 +104,9 @@ object SpatialTable {
       * self-contained snapshots). Plain layouts only. */
     def physical: Map[Long, String] =
       if (scoped) sources else partitions.keys.map(_ -> snapshot).toMap
+    /** Live rows of the snapshot: the manifest's per-partition row
+      * counts, plain or temporal (0 when `keyed` is false). */
+    def rows: Long = partitions.values.sum + tpartitions.values.sum
     /** Partition key -> physical holder, layout-agnostic. Empty for
       * legacy temporal manifests written before partitions were
       * recorded (callers must fall back to whole-table paths). */

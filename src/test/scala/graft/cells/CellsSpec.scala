@@ -221,4 +221,43 @@ class CellsSpec extends AnyFunSuite {
     val perRow = d.groupBy(Cells.iy).map { case (_, cs) => cs.map(Cells.ix).toSet.size }
     assert(perRow.forall(_ == 16))
   }
+
+  test("diskParents equals the distinct parents of the enumerated disk") {
+    val rnd = rng
+    def check(c: Long, k: Int, r: Int): Unit = {
+      val got = Cells.diskParents(c, k, r)
+      val want = Cells.disk(c, k).map(Cells.parentAt(_, r)).distinct
+      assert(got.length == got.distinct.length, s"duplicates for cell $c k=$k r=$r")
+      assert(got.sorted.toSeq == want.sorted.toSeq, s"cell $c k=$k r=$r")
+    }
+    (1 to trials).foreach { _ =>
+      // disk() enumerates O(k^3) ring cells: grids of up to 64 x 64
+      val res = 1 + rnd.nextInt(6)
+      val n = 1L << res
+      // a third of the cells sit on the first or last column (wrap) or
+      // the pole rows
+      val x = rnd.nextInt(3) match {
+        case 0 => if (rnd.nextBoolean()) 0L else n - 1
+        case _ => nextLong(rnd, n)
+      }
+      val y = rnd.nextInt(3) match {
+        case 0 => if (rnd.nextBoolean()) 0L else n - 1
+        case _ => nextLong(rnd, n)
+      }
+      val c = Cells.pack(res, x, y)
+      // radii from 0 past half the grid (full-width disks), parents from
+      // the root to the cell's own resolution
+      val k = rnd.nextInt((n + 2).toInt)
+      check(c, k, rnd.nextInt(res + 1))
+      check(c, k, res)
+    }
+    // the named edge cases, deterministically
+    val res = 4
+    val n = 1L << res
+    for {
+      (x, y) <- Seq((0L, 0L), (n - 1, n - 1), (0L, n / 2), (n - 1, 3L), (n / 2, 0L))
+      k <- Seq(0, 1, 3, (n / 2).toInt - 1, (n / 2).toInt, n.toInt, 2 * n.toInt)
+      r <- 0 to res
+    } check(Cells.pack(res, x, y), k, r)
+  }
 }

@@ -239,34 +239,148 @@ class OperatorsSpec extends AnyFunSuite with SparkTest {
     ready
     import spark.implicits._
     val rnd = new scala.util.Random(41)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
     val ptsDf = (0 until 400)
-      .map(i => (s"p$i", rnd.nextDouble() * 20 - 10, rnd.nextDouble() * 20 - 10))
-      .toDF("id", "lon", "lat")
-    val root = java.nio.file.Files.createTempDirectory("graft_knn_tbl").toString
-    graft.table.SpatialTable.write(spark, ptsDf, root, "s1", "id", "lon", "lat",
-      res = 9, prefixRes = 3, salts = 1, partitions = 2)
+      .map(i => (s"p$i", rnd.nextDouble() * 20 - 10, rnd.nextDouble() * 20 - 10,
+        new java.sql.Timestamp(t0 + (rnd.nextDouble() * 80 * 86400000L).toLong)))
+      .toDF("id", "lon", "lat", "dtg")
     val queries = Seq((0, 0.0, 0.0), (1, 8.0, -8.0)).toDF("qid", "qlon", "qlat")
-    // job ids are assigned synchronously at submit, so the id high-water
-    // mark counts the jobs a code path ran
-    def jobsDuring[T](body: => T): (Int, T) = {
-      def hi = spark.sparkContext.statusTracker.getJobIdsForGroup(null)
-        .foldLeft(-1)(_ max _)
-      val before = hi
-      val r = body
-      (hi - before, r)
-    }
     def ids(df: org.apache.spark.sql.DataFrame): Set[(Int, String)] =
       df.select("qid", "id").collect().map(r => (r.getInt(0), r.getString(1))).toSet
-    val (jobsSeeded, seeded) = jobsDuring(ids(KnnJoin.forTable(spark, root, "s1",
-      "lon", "lat", queries, "qid", "qlon", "qlat", k = 5, res = 7)))
-    val (jobsRaw, raw) = jobsDuring(ids(KnnJoin(spark,
-      graft.table.SpatialTable.read(spark, root, "s1"), "lon", "lat",
-      queries, "qid", "qlon", "qlat", k = 5, res = 7)))
-    assert(seeded == raw, s"metadata seed changed results: ${seeded -- raw} / ${raw -- seeded}")
-    assert(seeded == ids(KnnJoin.bruteForce(ptsDf, "lon", "lat",
-      queries, "qid", "qlon", "qlat", k = 5)))
-    assert(jobsSeeded < jobsRaw,
-      s"expected the seeded path to skip the count() job: $jobsSeeded vs $jobsRaw")
+    // plain and temporal layouts: the temporal manifest keeps its row
+    // counts per (time_bin, cell_prefix), and the seed must read those too
+    val layouts = Seq[(String, String => Unit)](
+      "plain" -> (root => graft.table.SpatialTable.write(spark, ptsDf, root, "s1", "id", "lon", "lat",
+        res = 9, prefixRes = 3, salts = 1, partitions = 2)),
+      "temporal" -> (root => graft.table.SpatialTable.writeTemporal(spark, ptsDf, root, "s1", "id",
+        "lon", "lat", "dtg", period = "month", res = 9, prefixRes = 3, salts = 1, partitions = 2)))
+    for ((layout, write) <- layouts) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_knn_$layout").toString
+      write(root)
+      val (seededActions, jobsSeeded, seeded) = actionsDuring(ids(KnnJoin.forTable(spark, root, "s1",
+        "lon", "lat", queries, "qid", "qlon", "qlat", k = 5, res = 7)))
+      val (rawActions, jobsRaw, raw) = actionsDuring(ids(KnnJoin(spark,
+        graft.table.SpatialTable.read(spark, root, "s1"), "lon", "lat",
+        queries, "qid", "qlon", "qlat", k = 5, res = 7)))
+      assert(seeded == raw, s"$layout: metadata seed changed results: ${seeded -- raw} / ${raw -- seeded}")
+      assert(seeded == ids(KnnJoin.bruteForce(ptsDf, "lon", "lat",
+        queries, "qid", "qlon", "qlat", k = 5)), layout)
+      // the search starts by checkpointing the query state: before it,
+      // the raw frame counts its points, the table seeds from metadata
+      def beforeSearch(actions: Seq[String]) = actions.takeWhile(_ != "localCheckpoint")
+      assert(beforeSearch(rawActions) == Seq("count"), s"$layout: raw path actions $rawActions")
+      assert(beforeSearch(seededActions).isEmpty,
+        s"$layout: expected the seeded path to skip the count() scan: $seededActions")
+      assert(jobsSeeded < jobsRaw,
+        s"$layout: expected the seeded path to skip the count() job: $jobsSeeded vs $jobsRaw")
+    }
+  }
+
+  test("kNN over a SpatialTable reads only the prefixes its disks reach, " +
+    "exactly: antimeridian, high latitude, capped and dense queries") {
+    ready
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    val rnd = new scala.util.Random(53)
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    def blob(n: Int, name: String, lon: => Double, lat: => Double) =
+      (0 until n).map(i => (s"$name$i", lon, lat))
+    def wrapLon(x: Double) = if (x > 180) x - 360 else if (x < -180) x + 360 else x
+    val rows =
+      blob(300, "d", 10 + rnd.nextGaussian(), 10 + rnd.nextGaussian()) ++
+        // straddles the antimeridian
+        blob(150, "a", wrapLon(180 + rnd.nextGaussian() * 0.8), -20 + rnd.nextGaussian() * 0.8) ++
+        blob(60, "h", 30 + rnd.nextGaussian() * 8, 80 + rnd.nextDouble() * 4) ++
+        // scattered, except around the capped query
+        blob(80, "w", rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 160 - 80).filterNot {
+          case (_, lon, lat) => lon > -120 && lon < -80 && lat > -72 && lat < -48
+        } ++
+        Seq(("s0", -101.0, -61.0), ("s1", -98.5, -59.5))
+    val ptsDf = rows.map { case (id, lon, lat) =>
+      (id, lon, lat, new java.sql.Timestamp(t0 + (rnd.nextDouble() * 80 * 86400000L).toLong))
+    }.toDF("id", "lon", "lat", "dtg")
+    val res = 7
+    def ids(df: org.apache.spark.sql.DataFrame): Set[(Int, String)] =
+      df.select("qid", "id").collect().map(r => (r.getInt(0), r.getString(1))).toSet
+    // the operator's contract: the k nearest among the points within the
+    // query's maxRings disk (the whole answer unless the query is capped)
+    def oracle(qs: Seq[(Int, Double, Double)], k: Int, maxRings: Int): Set[(Int, String)] =
+      qs.flatMap { case q @ (_, qlon, qlat) =>
+        val disk = Cells.disk(Cells.cell(qlon, qlat, res), maxRings).toSet
+        val reach = rows.filter { case (_, lon, lat) => disk(Cells.cell(lon, lat, res)) }
+        ids(KnnJoin.bruteForce(reach.toDF("id", "lon", "lat"), "lon", "lat",
+          Seq(q).toDF("qid", "qlon", "qlat"), "qid", "qlon", "qlat", k))
+      }.toSet
+    def filesRead(df: org.apache.spark.sql.DataFrame): Long =
+      new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case s: FileSourceScanExec => s.metrics("numFiles").value
+      }.sum
+    val layouts = Seq[(String, String => Unit)](
+      "plain" -> (root => graft.table.SpatialTable.write(spark, ptsDf, root, "s1", "id", "lon", "lat",
+        res = 9, prefixRes = 3, salts = 2, partitions = 4)),
+      "temporal" -> (root => graft.table.SpatialTable.writeTemporal(spark, ptsDf, root, "s1", "id",
+        "lon", "lat", "dtg", period = "month", res = 9, prefixRes = 3, salts = 2, partitions = 4)))
+    for ((layout, write) <- layouts) {
+      val root = java.nio.file.Files.createTempDirectory(s"graft_knn_prune_$layout").toString
+      write(root)
+      val stored = {
+        val data = new java.io.File(s"$root/data")
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+        walk(data).count(_.getName.endsWith(".parquet"))
+      }
+      def run(qs: Seq[(Int, Double, Double)], k: Int, maxRings: Int) = {
+        val df = KnnJoin.forTable(spark, root, "s1", "lon", "lat",
+          qs.toDF("qid", "qlon", "qlat"), "qid", "qlon", "qlat", k = k, res = res, maxRings = maxRings)
+        val got = df.collect().map(r => (r.getAs[Int]("qid"), r.getAs[String]("id"))).toSet
+        assert(got == oracle(qs, k, maxRings), s"$layout: ${qs.map(_._1)} disagree with the oracle")
+        (got, df)
+      }
+      // antimeridian and high latitude: wide and wrapping disks
+      val (edge, _) = run(Seq((0, 179.9, -20.0), (1, -179.8, -19.5), (2, 31.0, 81.0)), k = 8, maxRings = 64)
+      assert(edge.count(_._1 == 0) == 8 && edge.count(_._1 == 2) == 8, layout)
+      assert(edge.exists { case (q, id) => q == 0 && id.startsWith("a") }, layout)
+      // capped: two points within a 4-ring disk, k = 5
+      val (capped, _) = run(Seq((3, -100.0, -60.0)), k = 5, maxRings = 4)
+      assert(capped.map(_._2) == Set("s0", "s1"), s"$layout: capped query returned $capped")
+      assert(KnnJoin.lastSearch.prefixesKept.nonEmpty, layout)
+      // dense: every pass keeps a few prefixes, the final pass reads few files
+      val (_, dense) = run(Seq((4, 10.0, 10.0), (5, 10.5, 9.5)), k = 5, maxRings = 64)
+      val search = KnnJoin.lastSearch
+      assert(search.prefixesKept.size == search.growthRounds + 1, s"$layout: $search")
+      assert(search.prefixesKept.forall(n => n > 0 && n < search.prefixesTotal), s"$layout: $search")
+      val files = filesRead(dense)
+      assert(files > 0 && files < stored, s"$layout: the final pass read $files of $stored files")
+    }
+  }
+
+  /** The Dataset actions (by name) and the Spark jobs `body` ran, and
+    * its result. */
+  private def actionsDuring[T](body: => T): (Seq[String], Int, T) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val actions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val qel = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = actions.add(funcName)
+      def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = actions.add(funcName)
+    }
+    val jl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+    spark.listenerManager.register(qel)
+    spark.sparkContext.addSparkListener(jl)
+    try {
+      val r = body
+      org.apache.spark.GraftListenerBus.drain(spark.sparkContext)
+      (actions.toArray(Array.empty[String]).toSeq, jobs.get, r)
+    } finally {
+      spark.listenerManager.unregister(qel)
+      spark.sparkContext.removeSparkListener(jl)
+    }
   }
 
   test("kNN many-query regime: 10^4 query points, DataFrame state (no IN-list), " +

@@ -264,7 +264,11 @@ class ConvertersSpec extends AnyFunSuite with SparkTest {
       """<e><b>one</b><b x="v">two</b></e>""",
       """<e><b/><b>hi</b></e>""",
       // present-but-empty attribute on the first sibling IS a node
-      """<e><b x="">p</b><b x="v">q</b></e>""")
+      """<e><b x="">p</b><b x="v">q</b></e>""",
+      // text() over mixed text and CDATA: XPath merges adjacent text and
+      // CDATA into one text node ("xy", "pq"); a comment splits it ("x")
+      """<e><b>x<![CDATA[y]]></b><c><![CDATA[p]]>q<d>in</d>r</c></e>""",
+      """<e><b>x<!--z-->y</b><c>t &amp; u<![CDATA[v]]>w</c></e>""")
     val paths = Seq("/e/@a", "/e/b", "/e/b/text()", "/e/c", "/e/c/text()",
       "b", "c/d", "@a", "e/b", "b/@x")
     // every path is inside the simple subset -> the fast group
