@@ -137,7 +137,7 @@ object KnnJoin {
     val n = st.map(_.count).orElse(Some(info.rows).filter(_ => info.keyed))
     val prefixes =
       if (info.keyed && res >= info.prefixRes)
-        Some(Prefixes(info.prefixRes, info.physicalKeys.keys.map(_.prefix).toSet))
+        Some(Prefixes(info.prefixRes, info.physicalKeys.keys.map(_.value).toSet))
       else None
     search(spark, SpatialTable.read(spark, root, info), lonCol, latCol,
       queries, qidCol, qLonCol, qLatCol, k, res, maxRings, metric, tieBreakCols, n, prefixes)

@@ -91,9 +91,7 @@ object GeoJsonQuery {
         .head()
       val (w, h) = (Option(m.get(0)).fold(0.0)(_ => m.getDouble(0)),
         Option(m.get(1)).fold(0.0)(_ => m.getDouble(1)))
-      val out = fs.create(padPath, true)
-      out.write(s"""{"max_w":$w,"max_h":$h}""".getBytes("UTF-8"))
-      out.close()
+      graft.table.Snapshots.writeString(fs, padPath.toString, s"""{"max_w":$w,"max_h":$h}""")
     }
     snap
   }
@@ -116,8 +114,7 @@ object GeoJsonQuery {
       case Some((x0, y0, x1, y1)) =>
         val padPath = new org.apache.hadoop.fs.Path(s"$root/_manifests/$snapshotId.geojson.json")
         val fs = padPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        val in = fs.open(padPath)
-        val pad = try mapper.readTree(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+        val pad = mapper.readTree(graft.table.Snapshots.readString(fs, padPath))
         val (w, h) = (pad.get("max_w").asDouble, pad.get("max_h").asDouble)
         val box = (math.max(-180.0, x0 - w), math.max(-90.0, y0 - h),
           math.min(180.0, x1 + w), math.min(90.0, y1 + h))

@@ -1,12 +1,11 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row, SQLContext, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
-import graft.table.SpatialTable
+import graft.table.{GeomTable, Snapshots, SpatialTable, TableEngine}
 
 /**
  * The `spark.read.format("graft")` front door — the packaging analog of
@@ -57,8 +56,10 @@ class GraftDataSource extends DataSourceRegister
     val spark = sqlContext.sparkSession
     val (root, snap) = GraftRelation.resolve(spark, parameters)
     val p2 = parameters + ("snapshot" -> snap)
-    if (GraftRelation.isExtentManifest(spark, root, snap)) GeomGraftRelation(sqlContext, p2)
-    else GraftRelation(sqlContext, p2)
+    TableEngine.manifest(spark, root, snap).layout match {
+      case _: GeomTable.Manifest => GeomGraftRelation(sqlContext, p2)
+      case _ => GraftRelation(sqlContext, p2)
+    }
   }
 
   /** User-supplied schemas are refused rather than silently ignored:
@@ -96,11 +97,8 @@ class GraftDataSource extends DataSourceRegister
           // the data sources maps and every delta-rebuilt index layout's
           // sources sidecar (ADVICE r4: a descendant can rewrite all its
           // data prefixes yet still inherit attr_buckets from here)
-          val refs = SpatialTable.snapshots(spark, root).filter(_ != snapshot).filter { s =>
-            if (GraftRelation.isExtentManifest(spark, root, s))
-              graft.table.GeomTable.referencedSnapshots(spark, root, s).contains(snapshot)
-            else SpatialTable.referencedSnapshots(spark, root, s).contains(snapshot)
-          }
+          val refs = SpatialTable.snapshots(spark, root).filter(_ != snapshot)
+            .filter(TableEngine.referencedSnapshots(spark, root, _).contains(snapshot))
           require(refs.isEmpty,
             s"cannot overwrite snapshot $snapshot: snapshot(s) ${refs.mkString(", ")} " +
               "reference its files (scoped-mutation descendants) — mutate forward or " +
@@ -108,22 +106,7 @@ class GraftDataSource extends DataSourceRegister
           // drop ALL of this snapshot's artifacts — data, metrics,
           // manifest, every index layout + its markers/sidecars, stats —
           // so nothing stale answers for the rewritten id
-          val f = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-          val indexDirs =
-            if (!f.exists(new Path(root))) Seq.empty
-            else f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith("index_"))
-              .map(d => s"$root/$d/snapshot=$snapshot")
-          val markers =
-            if (!f.exists(new Path(s"$root/_manifests"))) Seq.empty
-            else f.listStatus(new Path(s"$root/_manifests")).toSeq.map(_.getPath.getName)
-              .filter(_.startsWith(s"$snapshot.attr_"))
-              .map(n => s"$root/_manifests/$n")
-          (Seq(s"$root/data/snapshot=$snapshot", s"$root/_metrics/snapshot=$snapshot",
-            s"$root/_stats/$snapshot.json",
-            s"$root/_manifests/$snapshot.json", s"$root/_manifests/$snapshot.committed") ++
-            indexDirs ++ markers)
-            .foreach(p => f.delete(new Path(p), true))
+          Snapshots.delete(spark, root, Seq(snapshot))
         }
         val idCol = parameters.getOrElse("id", "id")
         val lonCol = parameters.getOrElse("lon", "lon")
@@ -152,7 +135,7 @@ class GraftDataSource extends DataSourceRegister
           // selects the GeomTable chunked XZ layout (temporal with dtg);
           // `indexed` and stats-on-write compose like the point path
           // (review r5c #3: the geom branch previously skipped both)
-          import graft.table.{GeomTable, TableStats}
+          import graft.table.TableStats
           GeomTable.write(spark, data, root, snapshot,
             parameters("geom"), dtg,
             parameters.getOrElse("res", "12").toInt,
@@ -253,21 +236,17 @@ object GraftRelation {
     (root, snap)
   }
 
-  /** Extent (GeomTable) manifests never carry prefix_res; point
-    * (SpatialTable) manifests always do — one byte-level probe decides
-    * which relation serves the root. */
-  private[sources] def isExtentManifest(spark: org.apache.spark.sql.SparkSession,
-                                        root: String, snapshotId: String): Boolean = {
-    val p = new Path(s"$root/_manifests/$snapshotId.json")
-    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(f.exists(p), s"no manifest for snapshot $snapshotId under $root")
-    val in = f.open(p)
-    val txt = try new String(org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-      finally in.close()
-    // TOP-LEVEL field test, not a substring probe: both manifests embed
-    // the full Spark schema JSON, so a user column literally named
-    // "prefix_res" must not misroute the table (review r5 #5)
-    !new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt).has("prefix_res")
+  /** The tail both relations' scans share: the `cql` option compiled
+    * against the layout's geometry property, every translated filter
+    * re-applied exactly on the pruned base, then the projection. */
+  private[sources] def finish(base: DataFrame, parameters: Map[String, String],
+                              geomProps: Map[String, Column], requiredColumns: Array[String],
+                              filters: Array[Filter]): RDD[Row] = {
+    val withCql = parameters.get("cql").fold(base)(q =>
+      graft.plans.Cql.filter(base, q, geomProps, parameters.getOrElse("id", "id")))
+    val filtered = filters.flatMap(translate).foldLeft(withCql)(_ where _)
+    (if (requiredColumns.isEmpty) filtered.select()
+     else filtered.select(requiredColumns.toSeq.map(col): _*)).rdd
   }
 
   /** The filter subset the relations translate onto the inner scan;
@@ -309,22 +288,19 @@ case class GeomGraftRelation(sqlContext: SQLContext,
                              parameters: Map[String, String])
     extends BaseRelation with PrunedFilteredScan {
 
-  import graft.table.GeomTable
-
   private val root = GraftRelation.rootOf(parameters)
   private def spark = sqlContext.sparkSession
   private val snapshotId = parameters("snapshot")
   // ONE manifest parse serves the relation's schema and every scan
   private val info = GeomTable.ginfo(spark, root, snapshotId)
-  private val geomCol = info.m.geom
   // attr -> bucket modulus, read ONCE (like `info`) so the indexed
   // route costs no metadata round-trips per scan
   private val indexedAttrs: Map[String, Option[Int]] =
     GeomTable.indexedColumns(spark, root, snapshotId)
 
   override val schema: StructType =
-    if (info.chunked)
-      StructType(info.readOrder.map(f => info.schema.get(f).copy(nullable = true)))
+    if (info.keyed)
+      StructType(info.readOrder.map(f => info.schema(f).copy(nullable = true)))
     else
       StructType(GeomTable.read(spark, root, info).schema.map(_.copy(nullable = true)))
 
@@ -388,16 +364,7 @@ case class GeomGraftRelation(sqlContext: SQLContext,
         case None => GeomTable.read(spark, root, info)
       }
     }
-    val withCql = parameters.get("cql") match {
-      case Some(q) => graft.plans.Cql.filter(base, q,
-        Map("geom" -> col(geomCol)), parameters.getOrElse("id", "id"))
-      case None => base
-    }
-    val filtered = filters.flatMap(GraftRelation.translate).foldLeft(withCql)(_ where _)
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.toSeq.map(col): _*)
-    projected.rdd
+    GraftRelation.finish(base, parameters, info.layout.geomProps(base), requiredColumns, filters)
   }
 }
 
@@ -417,7 +384,6 @@ case class GraftRelation(sqlContext: SQLContext,
   private val info = SpatialTable.manifestInfo(spark, root, snapshotId)
   private val lonCol = parameters.getOrElse("lon", "lon")
   private val latCol = parameters.getOrElse("lat", "lat")
-  private val cql = parameters.get("cql")
 
   // nullable-normalized: the parquet scan underneath reports every
   // column nullable regardless of how the writing plan typed it
@@ -513,19 +479,7 @@ case class GraftRelation(sqlContext: SQLContext,
       case Some((b0, b1)) => base0.where(col("time_bin").between(b0, b1))
       case None => base0
     }
-    val withCql = cql match {
-      case Some(q) =>
-        val defaults: Map[String, Column] =
-          if (base.columns.contains(lonCol) && base.columns.contains(latCol))
-            Map("geom" -> graft.functions.StFunctions.fn("st_makePoint")(col(lonCol), col(latCol)))
-          else Map.empty
-        graft.plans.Cql.filter(base, q, defaults, parameters.getOrElse("id", "id"))
-      case None => base
-    }
-    val filtered = filters.flatMap(translate).foldLeft(withCql)(_ where _)
-    val projected =
-      if (requiredColumns.isEmpty) filtered.select()
-      else filtered.select(requiredColumns.toSeq.map(col): _*)
-    projected.rdd
+    GraftRelation.finish(base, parameters,
+      info.layout.copy(lonCol = lonCol, latCol = latCol).geomProps(base), requiredColumns, filters)
   }
 }

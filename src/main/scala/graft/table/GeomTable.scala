@@ -1,23 +1,30 @@
 package graft.table
 
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.cells.{BinnedTime, XZ2, XZ3}
 import graft.functions.StFunctions
 import graft.geom.GeomOps
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /**
- * Snapshot layout for NON-POINT geometries — the reference's XZ2/XZ3
+ * The extent table, for NON-POINT geometries — the reference's XZ2/XZ3
  * feature indices for line/polygon default geometries
  * (geomesa-index-api/.../index/z2/XZ2Index.scala, z3/XZ3Index.scala;
- * exercised end-to-end by ZLineTest over a LineString type). The
- * point-oriented SpatialTable keys rows by the packed centroid cell;
+ * exercised end-to-end by ZLineTest over a LineString type). The point
+ * table ([[SpatialTable]]) keys rows by the packed centroid cell;
  * extended geometries instead key by the XZ sequence code of their
  * envelope, which never splits a geometry across rows (one row per
- * feature, exactly like the reference's XZ "one key per feature"
- * design — no dedup pass needed downstream).
+ * feature, exactly like the reference's XZ "one key per feature" design
+ * — no dedup pass needed downstream).
+ *
+ * This is the second key layout of the one [[TableEngine]]: the
+ * manifest codec, writer, scoped commits, attribute-index layouts,
+ * stats deltas and GC are the engine's. What is extent-specific lives
+ * here: [[Manifest]], the layout (envelope + XZ derivation, the chunk
+ * key), and the reads that prune by XZ code (`chunkPrune`,
+ * `readEnvelope`, `readBBox`, `readBBoxTime`).
  *
  * Layout (since round 5 — the "chunked" shape):
  *   <root>/data/snapshot=<id>/[time_bin=<b>/]xz_chunk=<c>/part-*.parquet
@@ -25,17 +32,15 @@ import org.apache.spark.sql.types.StructType
  *   <root>/_manifests/<id>.json + .committed
  *
  * `xz_chunk` is the XZ2 sequence code of the feature's envelope at a
- * COARSE resolution (`chunkRes`) — the extent-table analog of
- * SpatialTable's cell_prefix partition directories. It buys two things:
+ * COARSE resolution (`chunkRes`) — the extent-table analog of the point
+ * table's cell_prefix partition directories. It buys two things:
  * (1) bbox reads prune whole chunk DIRECTORIES from the coarse XZ
  * ranges before any file is listed; (2) mutations are FILE-GRANULAR —
  * only the chunks holding matched rows rewrite, every untouched chunk
- * is carried into the new snapshot's manifest BY REFERENCE (`sources`),
- * exactly the commitScoped pattern (SpatialTable.scala) ported to the
- * XZ key space (VERDICT r4 #1: the reference FeatureWriter mutates
- * features of ANY schema — AccumuloFeatureWriterTest:52-171 is
- * schema-generic and AccumuloDataStoreDeleteTest runs its delete blocks
- * over xz indices — so extent layouts need the same mutation surface).
+ * is carried into the new snapshot's manifest BY REFERENCE (VERDICT r4
+ * #1: the reference FeatureWriter mutates features of ANY schema —
+ * AccumuloFeatureWriterTest:52-171 is schema-generic and
+ * AccumuloDataStoreDeleteTest runs its delete blocks over xz indices).
  *
  * Snapshots written before round 5 (no chunk directories, no schema in
  * the manifest) still read through the legacy path; mutating one falls
@@ -48,25 +53,10 @@ import org.apache.spark.sql.types.StructType
  * inclusive envelope re-check on the stored extent columns (pure
  * codegen) -> exact JTS st_intersects refine. At 10^12 rows the scan
  * touches only the pruned chunks' row groups; nothing shuffles.
- *
- * Every chunked snapshot and index-layout read is planned from the
- * parsed manifest through a [[SnapshotIndex]] (as in SpatialTable):
- * the directory levels above are partition filters it evaluates
- * against the manifest's keys, so building a query lists nothing and
- * its execution lists only the kept chunk directories.
  */
 object GeomTable {
 
   private val ChunkCol = "xz_chunk"
-
-  /** The engine-derived columns (never user data). */
-  private val DerivedCols = Set("minx", "miny", "maxx", "maxy", "xz", ChunkCol, "time_bin")
-
-  private def fs(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  def isCommitted(spark: SparkSession, root: String, snapshotId: String): Boolean =
-    fs(spark, root).exists(new Path(s"$root/_manifests/$snapshotId.committed"))
 
   /** Envelope of a WKB geometry as (minx, miny, maxx, maxy) — parsed
     * ONCE per row at ingest; the stored extent columns serve every
@@ -80,80 +70,94 @@ object GeomTable {
     }
   }
 
-  /** A data-partition key: the coarse chunk code, plus the time bin on
-    * temporal layouts. Bounded by chunkRes (a few hundred chunks
-    * worldwide at the default) times the live bins — the same
-    * manifest-scale argument as SpatialTable.PKey. */
-  private[graft] final case class GKey(bin: Option[Int], chunk: Long) {
-    def relpath: String =
-      bin.map(b => s"time_bin=$b/").getOrElse("") + s"$ChunkCol=$chunk"
-    def sourceKey: String = bin.map(b => s"$b/$chunk").getOrElse(chunk.toString)
-    /** The partition-column values, in [[GInfo.partitionCols]] order. */
-    def values: Seq[Any] = bin.toSeq :+ chunk
-  }
-
+  /** The extent key layout `(time_bin?, xz_chunk)` and the parameters a
+    * snapshot was WRITTEN with. Queries must plan against these — XZ
+    * codes built at a different res (or time bins at a different period)
+    * have a different key base, and a mismatched BETWEEN silently
+    * filters out every row. Temporal when written with a dtg. */
   final case class Manifest(res: Int, period: String, dtg: Option[String],
-                            geom: String = "geom", chunkRes: Int = 4)
-
-  /** Full manifest contents for chunked (round-5) layouts; `schema`
-    * None marks a legacy snapshot (plain files, no chunk dirs). */
-  private[graft] final case class GInfo(snapshot: String, m: Manifest,
-                                        schema: Option[StructType],
-                                        partitions: Map[GKey, Long],
-                                        sources: Map[GKey, String],
-                                        scoped: Boolean) {
-    def temporal: Boolean = m.dtg.isDefined
-    def chunked: Boolean = schema.isDefined
-    def partitionCols: Seq[String] =
-      if (temporal) Seq("time_bin", ChunkCol) else Seq(ChunkCol)
-    def readOrder: Seq[String] =
-      schema.get.fieldNames.filterNot(partitionCols.contains).toSeq ++ partitionCols
-    /** The manifest schema in [[readOrder]]. */
-    def readSchema: StructType = StructType(readOrder.map(schema.get(_)))
-    def physicalKeys: Map[GKey, String] =
-      if (scoped) sources else partitions.keys.map(_ -> snapshot).toMap
+                            geom: String = "geom", chunkRes: Int = 4) extends KeyLayout {
+    def keyCol: String = ChunkCol
+    def temporal: Boolean = dtg.isDefined
+    def sortCol: String = "xz"
+    def derivedCols: Set[String] = Set("minx", "miny", "maxx", "maxy", "xz", ChunkCol, "time_bin")
+    /** Envelope, xz, xz_chunk, and time_bin on temporal layouts. Rows
+      * whose geometry is null/empty (or dtg null on a temporal layout)
+      * are not indexable and drop, like the reference's write-time
+      * validation. */
+    def withDerived(df: DataFrame): DataFrame = {
+      val p = BinnedTime.period(period)
+      val chunkSfc = XZ2(chunkRes)
+      val chunkUdf = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
+        chunkSfc.index(minx, miny, maxx, maxy)
+      }
+      val withEnv = df
+        .withColumn("_env", envUdf(col(geom)))
+        .where(col("_env").isNotNull)
+        .withColumn("minx", col("_env._1")).withColumn("miny", col("_env._2"))
+        .withColumn("maxx", col("_env._3")).withColumn("maxy", col("_env._4"))
+        .drop("_env")
+      val keyed = dtg match {
+        case Some(d) =>
+          val xz3 = XZ3(res, p)
+          val xzUdf = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double, millis: Long) =>
+            val b = BinnedTime.toBinned(p, millis)
+            (b.bin.toInt, xz3.index(minx, miny, b.offset, maxx, maxy, b.offset))
+          }
+          withEnv
+            .where(col(d).isNotNull)
+            .withColumn("_k", xzUdf(col("minx"), col("miny"), col("maxx"), col("maxy"),
+              unix_millis(col(d).cast("timestamp"))))
+            .withColumn("time_bin", col("_k._1")).withColumn("xz", col("_k._2"))
+            .drop("_k")
+        case None =>
+          val xz2 = XZ2(res)
+          val xzUdf = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
+            xz2.index(minx, miny, maxx, maxy)
+          }
+          withEnv.withColumn("xz", xzUdf(col("minx"), col("miny"), col("maxx"), col("maxy")))
+      }
+      keyed.withColumn(ChunkCol, chunkUdf(col("minx"), col("miny"), col("maxx"), col("maxy")))
+    }
+    def shuffleCols: Seq[String] = partitionCols
+    def spread: Int = 1
+    def mutationPartitions: Int = 8
+    def boundsCols: (String, String, String, String) = ("minx", "miny", "maxx", "maxy")
+    def lineage: Boolean = false
+    def geomProps(df: DataFrame): Map[String, Column] = Map("geom" -> col(geom))
+    /** Chunked manifests; legacy ones (no partition list) rewrite. */
+    def scopes(m: TableManifest[KeyLayout]): Boolean = m.keyed
+    def header(node: ObjectNode): Unit = {
+      node.put("res", res)
+      node.put("chunk_res", chunkRes)
+      node.put("period", period)
+      node.put("geom", geom)
+      dtg.foreach(node.put("dtg", _))
+    }
   }
 
-  /** Add the engine-derived placement columns (envelope, xz, xz_chunk,
-    * and time_bin on temporal layouts). ONE implementation: the write
-    * path, the mutation engine and upsert's partition-key probes must
-    * agree byte-for-byte. Rows whose geometry is null/empty (or dtg
-    * null on a temporal layout) are not indexable and drop, like the
-    * reference's write-time validation. */
-  private def withDerived(df: DataFrame, geomCol: String, dtgCol: Option[String],
-                          res: Int, period: String, chunkRes: Int): DataFrame = {
-    val p = BinnedTime.period(period)
-    val chunkSfc = XZ2(chunkRes)
-    val chunkUdf = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
-      chunkSfc.index(minx, miny, maxx, maxy)
-    }
-    val withEnv = df
-      .withColumn("_env", envUdf(col(geomCol)))
-      .where(col("_env").isNotNull)
-      .withColumn("minx", col("_env._1")).withColumn("miny", col("_env._2"))
-      .withColumn("maxx", col("_env._3")).withColumn("maxy", col("_env._4"))
-      .drop("_env")
-    val keyed = dtgCol match {
-      case Some(dtg) =>
-        val xz3 = XZ3(res, p)
-        val xzUdf = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double, millis: Long) =>
-          val b = BinnedTime.toBinned(p, millis)
-          (b.bin.toInt, xz3.index(minx, miny, b.offset, maxx, maxy, b.offset))
-        }
-        withEnv
-          .where(col(dtg).isNotNull)
-          .withColumn("_k", xzUdf(col("minx"), col("miny"), col("maxx"), col("maxy"),
-            unix_millis(col(dtg).cast("timestamp"))))
-          .withColumn("time_bin", col("_k._1")).withColumn("xz", col("_k._2"))
-          .drop("_k")
-      case None =>
-        val xz2 = XZ2(res)
-        val xzUdf = udf { (minx: Double, miny: Double, maxx: Double, maxy: Double) =>
-          xz2.index(minx, miny, maxx, maxy)
-        }
-        withEnv.withColumn("xz", xzUdf(col("minx"), col("miny"), col("maxx"), col("maxy")))
-    }
-    keyed.withColumn(ChunkCol, chunkUdf(col("minx"), col("miny"), col("maxx"), col("maxy")))
+  object Manifest {
+    /** Legacy (pre-round-5) manifests carry only some fields; the rest
+      * default. */
+    private[table] def parse(n: JsonNode): Manifest = Manifest(
+      Option(n.get("res")).map(_.asInt).getOrElse(12),
+      Option(n.get("period")).map(_.asText).getOrElse("week"),
+      Option(n.get("dtg")).filterNot(_.isNull).map(_.asText),
+      Option(n.get("geom")).map(_.asText).getOrElse("geom"),
+      Option(n.get("chunk_res")).map(_.asInt).getOrElse(4))
+  }
+
+  def isCommitted(spark: SparkSession, root: String, snapshotId: String): Boolean =
+    TableEngine.isCommitted(spark, root, snapshotId)
+
+  /** Parse an extent snapshot's manifest. */
+  private[graft] def ginfo(spark: SparkSession, root: String,
+                           snapshotId: String): TableManifest[Manifest] =
+    extent(TableEngine.manifest(spark, root, snapshotId))
+
+  private def extent(m: TableManifest[KeyLayout]): TableManifest[Manifest] = m.layout match {
+    case e: Manifest => m.copy(layout = e)
+    case _ => throw new IllegalArgumentException(s"snapshot ${m.snapshot} is not an extent table")
   }
 
   /**
@@ -167,135 +171,12 @@ object GeomTable {
   def write(spark: SparkSession, df: DataFrame, root: String, snapshotId: String,
             geomCol: String = "geom", dtgCol: Option[String] = None,
             res: Int = 12, period: String = "week", partitions: Int = 8,
-            chunkRes: Int = 4): Unit = {
-    if (isCommitted(spark, root, snapshotId)) return
-    val keyed = withDerived(df, geomCol, dtgCol, res, period, chunkRes)
-    val pcols = if (dtgCol.isDefined) Seq("time_bin", ChunkCol) else Seq(ChunkCol)
-    val dataPath = s"$root/data/snapshot=$snapshotId"
-    // lead the sort with the partition columns so partitionBy's writer
-    // keeps the xz ordering (it re-sorts any task whose rows are not
-    // already ordered by the partition expressions — which would
-    // silently destroy the row-group min/max stats on xz)
-    keyed
-      .repartition(partitions, pcols.map(col): _*)
-      .sortWithinPartitions((pcols :+ "xz").map(col): _*)
-      .write.mode("overwrite")
-      .partitionBy(pcols: _*)
-      .parquet(dataPath)
-    val written = spark.read.schema(keyed.schema).parquet(dataPath)
-    val partRows = written.groupBy(pcols.map(col): _*)
-      .agg(count(lit(1)).as("rows")).collect()
-    commitManifest(spark, root, snapshotId,
-      Manifest(res, period, dtgCol, geomCol, chunkRes), keyed.schema,
-      partRows.map { r =>
-        val k = if (dtgCol.isDefined) GKey(Some(r.getInt(0)), r.getLong(1))
-          else GKey(None, r.getLong(0))
-        k -> r.getLong(if (dtgCol.isDefined) 2 else 1)
-      }.toMap,
-      sources = None)
-  }
+            chunkRes: Int = 4): Unit =
+    TableEngine.write(spark, df, root, snapshotId,
+      Manifest(res, period, dtgCol, geomCol, chunkRes), partitions)
 
-  /** Serialize + commit a manifest (marker LAST, like every commit in
-    * the engine); `sources` present marks a scoped snapshot.
-    * `andMarker = false` defers the commit marker so index delta
-    * rebuilds land under the same idempotency umbrella. */
-  private def commitManifest(spark: SparkSession, root: String, snapshotId: String,
-                             m: Manifest, schema: StructType,
-                             partitions: Map[GKey, Long],
-                             sources: Option[Map[GKey, String]],
-                             andMarker: Boolean = true): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    node.put("snapshot", snapshotId)
-    node.put("res", m.res)
-    node.put("chunk_res", m.chunkRes)
-    node.put("period", m.period)
-    node.put("geom", m.geom)
-    m.dtg.foreach(node.put("dtg", _))
-    node.set[com.fasterxml.jackson.databind.node.ObjectNode]("schema",
-      mapper.readTree(schema.json).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode])
-    val parts = node.putArray("partitions")
-    partitions.toSeq.sortBy(_._1.relpath).foreach { case (k, rows) =>
-      val e = parts.addObject()
-      k.bin.foreach(e.put("time_bin", _))
-      e.put(ChunkCol, k.chunk)
-      e.put("rows", rows)
-    }
-    sources.foreach { srcs =>
-      val s = node.putObject("sources")
-      srcs.toSeq.sortBy(_._1.relpath).foreach { case (k, v) => s.put(k.sourceKey, v) }
-    }
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_manifests"))
-    writeString(f, s"$root/_manifests/$snapshotId.json", mapper.writeValueAsString(node))
-    if (andMarker) writeString(f, s"$root/_manifests/$snapshotId.committed", "")
-  }
-
-  private def writeString(f: FileSystem, path: String, s: String): Unit = {
-    val out = f.create(new Path(path), true)
-    out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
-
-  private def manifestString(spark: SparkSession, root: String, snapshotId: String): String = {
-    val path = new Path(s"$root/_manifests/$snapshotId.json")
-    val f = fs(spark, root)
-    require(f.exists(path), s"no manifest for snapshot $snapshotId under $root")
-    val in = f.open(path)
-    try new String(org.apache.commons.io.IOUtils.toByteArray(in),
-      java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
-  /** Full manifest parse. Legacy (pre-round-5) manifests — no schema,
-    * no partitions — parse with `schema = None`. */
-  private[graft] def ginfo(spark: SparkSession, root: String, snapshotId: String): GInfo = {
-    val n = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(manifestString(spark, root, snapshotId))
-    val m = Manifest(
-      Option(n.get("res")).map(_.asInt).getOrElse(12),
-      Option(n.get("period")).map(_.asText).getOrElse("week"),
-      Option(n.get("dtg")).filterNot(_.isNull).map(_.asText),
-      Option(n.get("geom")).map(_.asText).getOrElse("geom"),
-      Option(n.get("chunk_res")).map(_.asInt).getOrElse(4))
-    val schema = Option(n.get("schema")).map(s =>
-      org.apache.spark.sql.types.DataType.fromJson(s.toString).asInstanceOf[StructType])
-    var parts = Map.empty[GKey, Long]
-    Option(n.get("partitions")).foreach { arr =>
-      (0 until arr.size).foreach { i =>
-        val e = arr.get(i)
-        val k = GKey(Option(e.get("time_bin")).map(_.asInt), e.get(ChunkCol).asLong)
-        parts += k -> e.get("rows").asLong
-      }
-    }
-    var sources = Map.empty[GKey, String]
-    val scoped = Option(n.get("sources")).isDefined
-    Option(n.get("sources")).foreach { o =>
-      val it = o.fields()
-      while (it.hasNext) {
-        val e = it.next()
-        val k = e.getKey.split('/') match {
-          case Array(b, c) => GKey(Some(b.toInt), c.toLong)
-          case Array(c) => GKey(None, c.toLong)
-          case other => throw new IllegalStateException(
-            s"bad sources key '${other.mkString("/")}'")
-        }
-        sources += k -> e.getValue.asText
-      }
-    }
-    GInfo(snapshotId, m, schema, parts, sources, scoped)
-  }
-
-  /** Snapshot scan, planned from the manifest like SpatialTable.read:
-    * each live chunk key is one leaf of a [[SnapshotIndex]] — its
-    * directory under the snapshot that physically holds it (this one,
-    * or the ancestor a scoped mutation inherited it from) — and the
-    * manifest schema is the scan schema. Building the DataFrame lists
-    * nothing; the scan lists only the chunk (and time_bin) directories
-    * its partition filters keep. A fully deleted snapshot reads as an
-    * empty frame with the manifest schema. Legacy (pre-chunk)
-    * snapshots, whose manifests record neither schema nor partitions,
-    * read their directory directly. */
+  /** Snapshot scan, planned from the manifest ([[TableEngine.read]]);
+    * legacy (pre-chunk) snapshots read their directory. */
   def read(spark: SparkSession, root: String, snapshotId: String): DataFrame =
     read(spark, root, ginfo(spark, root, snapshotId))
 
@@ -303,29 +184,21 @@ object GeomTable {
     * query (review r5: readBBox was re-parsing the manifest three times
     * through the delegation chain — on an object store that is 3-5 GETs
     * per query for one small JSON). */
-  private[graft] def read(spark: SparkSession, root: String, info: GInfo): DataFrame =
-    if (!info.chunked) spark.read.parquet(s"$root/data/snapshot=${info.snapshot}")
-    else dataScan(spark, root, info, info.physicalKeys.toSeq)
+  private[graft] def read(spark: SparkSession, root: String, info: TableManifest[Manifest]): DataFrame =
+    TableEngine.read(spark, root, info)
 
-  /** A scan over the given live chunk keys (key -> physical holder). */
-  private def dataScan(spark: SparkSession, root: String, info: GInfo,
-                       keys: Seq[(GKey, String)]): DataFrame =
-    SnapshotIndex.scan(spark, info.readSchema, info.partitionCols,
-      keys.sortBy(_._1.relpath).map { case (k, src) =>
-        (k.values, s"$root/data/snapshot=$src/${k.relpath}")
-      })
-
-  /** The layout parameters the snapshot was WRITTEN with. Queries must
-    * plan against these — XZ codes built at a different res (or time
-    * bins at a different period) have a different key base, and a
-    * mismatched BETWEEN silently filters out every row. */
+  /** The layout parameters the snapshot was WRITTEN with. */
   def manifest(spark: SparkSession, root: String, snapshotId: String): Manifest =
-    ginfo(spark, root, snapshotId).m
+    ginfo(spark, root, snapshotId).layout
 
   private def boxWkb(minx: Double, miny: Double, maxx: Double, maxy: Double): Array[Byte] = {
     val gf = new org.locationtech.jts.geom.GeometryFactory()
     GeomOps.toWkb(gf.toGeometry(new org.locationtech.jts.geom.Envelope(minx, maxx, miny, maxy)))
   }
+
+  /** The inclusive envelope re-check on the stored extent columns. */
+  private def overlaps(minx: Double, miny: Double, maxx: Double, maxy: Double): Column =
+    col("minx") <= maxx && col("maxx") >= minx && col("miny") <= maxy && col("maxy") >= miny
 
   private def xzPred(ranges: Seq[graft.cells.IndexRange]): Column =
     ranges.map(r => col("xz").between(lit(r.lower), lit(r.upper))).reduce(_ || _)
@@ -335,11 +208,11 @@ object GeomTable {
     * ranges (the XZ cover guarantee), so a BETWEEN on the partition
     * column prunes whole chunk directories before any is listed. Legacy
     * layouts (no chunk column) skip this level. */
-  private def chunkPrune(df: DataFrame, info: GInfo,
+  private def chunkPrune(df: DataFrame, info: TableManifest[Manifest],
                          minx: Double, miny: Double, maxx: Double, maxy: Double): DataFrame =
-    if (!info.chunked) df
+    if (!info.keyed) df
     else {
-      val ranges = XZ2(info.m.chunkRes).ranges(minx, miny, maxx, maxy, 16)
+      val ranges = XZ2(info.layout.chunkRes).ranges(minx, miny, maxx, maxy, 16)
       df.where(ranges.map(r => col(ChunkCol).between(lit(r.lower), lit(r.upper)))
         .reduce(_ || _))
     }
@@ -355,20 +228,19 @@ object GeomTable {
                    maxRanges: Int = 64): DataFrame =
     readEnvelope(spark, root, ginfo(spark, root, snapshotId), minx, miny, maxx, maxy, maxRanges)
 
-  private[graft] def readEnvelope(spark: SparkSession, root: String, info: GInfo,
+  private[graft] def readEnvelope(spark: SparkSession, root: String, info: TableManifest[Manifest],
                                   minx: Double, miny: Double, maxx: Double, maxy: Double,
                                   maxRanges: Int): DataFrame = {
     val base = chunkPrune(read(spark, root, info), info, minx, miny, maxx, maxy)
-      .where(col("minx") <= maxx && col("maxx") >= minx &&
-        col("miny") <= maxy && col("maxy") >= miny)
+      .where(overlaps(minx, miny, maxx, maxy))
     // the xz BETWEEN ranges are XZ2-coded — TEMPORAL layouts store XZ3
     // codes in `xz` (a different key base; review r5 #1: applying XZ2
     // ranges there silently filtered out nearly every row), so a
     // time-unbounded envelope scan on them relies on chunk-directory
     // pruning + the envelope predicate (readBBoxTime supplies the
     // per-bin XZ3 ranges when the caller has a time interval)
-    if (info.m.dtg.isEmpty)
-      base.where(xzPred(XZ2(info.m.res).ranges(minx, miny, maxx, maxy, maxRanges)))
+    if (info.layout.dtg.isEmpty)
+      base.where(xzPred(XZ2(info.layout.res).ranges(minx, miny, maxx, maxy, maxRanges)))
     else base
   }
 
@@ -381,7 +253,8 @@ object GeomTable {
                maxRanges: Int = 64): DataFrame = {
     val info = ginfo(spark, root, snapshotId)
     readEnvelope(spark, root, info, minx, miny, maxx, maxy, maxRanges)
-      .where(StFunctions.fn("st_intersects")(col(info.m.geom), lit(boxWkb(minx, miny, maxx, maxy))))
+      .where(StFunctions.fn("st_intersects")(col(info.layout.geom),
+        lit(boxWkb(minx, miny, maxx, maxy))))
   }
 
   /**
@@ -396,7 +269,7 @@ object GeomTable {
                    maxRanges: Int = 64): DataFrame = {
     require(endMillis > startMillis, s"empty interval: $startMillis..$endMillis")
     val info = ginfo(spark, root, snapshotId)
-    val m = info.m
+    val m = info.layout
     require(m.dtg.isDefined, s"snapshot $snapshotId was written without a dtg column")
     val dtgCol = m.dtg.get
     val p = BinnedTime.period(m.period)
@@ -410,8 +283,7 @@ object GeomTable {
     }.reduce(_ || _)
     chunkPrune(read(spark, root, info), info, minx, miny, maxx, maxy)
       .where(binPred)
-      .where(col("minx") <= maxx && col("maxx") >= minx &&
-        col("miny") <= maxy && col("maxy") >= miny)
+      .where(overlaps(minx, miny, maxx, maxy))
       .where(unix_millis(col(dtgCol).cast("timestamp")).between(startMillis, endMillis - 1))
       .where(StFunctions.fn("st_intersects")(col(m.geom), lit(boxWkb(minx, miny, maxx, maxy))))
   }
@@ -425,145 +297,17 @@ object GeomTable {
     graft.plans.Cql.filter(read(spark, root, snapshotId), cql,
       Map("geom" -> col(geomCol)), idColumn)
 
-  // ---- file-granular mutation engine (VERDICT r4 #1) -------------------
-  //
-  // The commitScoped pattern (SpatialTable.scala:931-1045) in the XZ key
-  // space: predicate -> matched rows through the resolved scan -> touched
-  // chunk-key set -> partial rewrite with by-reference inheritance; a
-  // transformed geometry whose re-derived chunk lands outside the matched
-  // set pulls that chunk into the rewrite (mover closure), so a moved
-  // geometry is never lost or duplicated. A commit produces data +
-  // manifest, then delta-rebuilt attribute-index layouts and the writer
-  // stats delta, then the marker LAST — GC and crash recovery must
-  // account for all four artifact classes.
+  // ---- mutations, through the engine's scoped commit --------------------
 
-  /** CQL predicate over the user columns, null-safe for mutation
-    * routing (rows where the filter evaluates NULL are not matched). */
-  private def cqlPred(df: DataFrame, cql: String, geomCol: String, idColumn: String,
-                      props: Map[String, Column]): Column =
-    coalesce(graft.plans.Cql.parse(cql, Map("geom" -> col(geomCol)) ++ props,
-      idColumn, graft.plans.Cql.arrayProps(df)), lit(false))
-
-  /** The distinct partition keys a DataFrame's rows occupy. */
-  private def keysIn(info: GInfo, df: DataFrame): Seq[GKey] =
-    df.select(info.partitionCols.map(col): _*).distinct().collect().toSeq.map { r =>
-      if (info.temporal) GKey(Some(r.getInt(0)), r.getLong(1)) else GKey(None, r.getLong(0))
-    }
-
-  private def withDerived(info: GInfo, df: DataFrame): DataFrame =
-    withDerived(df, info.m.geom, info.m.dtg, info.m.res, info.m.period, info.m.chunkRes)
-
-  /** Whole-table copy-on-write rewrite — the mutation fallback for
-    * legacy snapshots (which re-commit in the chunked shape) and a
-    * utility in its own right. Recovery model: the data snapshot and
-    * each index layout commit under their OWN markers, so a crash
-    * between them leaves the data readable and the index unlisted
-    * (indexedColumns gates on markers — nothing routes through a
-    * half-built layout); re-running the same rewrite call is the
-    * documented recovery and heals the missing layouts idempotently. */
+  /** Whole-table copy-on-write rewrite ([[TableEngine.rewrite]]) — the
+    * mutation fallback for legacy snapshots (which re-commit in the
+    * chunked shape) and a utility in its own right. Re-running the same
+    * call is the documented recovery from a crash between the data
+    * snapshot and its index layouts. */
   def rewrite(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
-              transform: DataFrame => DataFrame, partitions: Int = 8): Unit = {
-    require(fromSnapshot != toSnapshot, "rewrite must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    val m = manifest(spark, root, fromSnapshot)
-    val base = read(spark, root, fromSnapshot).drop(DerivedCols.toSeq: _*)
-    write(spark, transform(base), root, toSnapshot, m.geom, m.dtg,
-      m.res, m.period, partitions, m.chunkRes)
-    // every index layout the source had is rebuilt in full (same
-    // bucket counts) — the whole-table path's consistency-by-
-    // construction, like SpatialTable.rewrite
-    indexedColumns(spark, root, fromSnapshot).foreach { case (a, b) =>
-      writeAttributeIndex(spark, root, toSnapshot, a, b.getOrElse(16))
-    }
-    // stats follow the rewrite: re-collect over the attributes the
-    // source tracked (the exact-refresh path)
-    TableStats.cached(spark, root, fromSnapshot).foreach { st =>
-      TableStats.collectGeom(spark, root, toSnapshot, st.attributes.keys.toSeq.sorted)
-    }
-  }
-
-  /**
-   * The scoped-commit engine shared by [[deleteWhere]], [[updateWhere]]
-   * and [[upsert]] on chunked layouts. `p0` — the chunk keys whose
-   * source rows feed `transform`; `mayMove = true` runs the mover
-   * closure. Commit order: data, manifest, marker LAST — idempotent /
-   * resumable like every commit in the engine.
-   */
-  private def commitScoped(spark: SparkSession, root: String, info: GInfo, to: String,
-                           p0: Seq[GKey], transform: DataFrame => DataFrame,
-                           removed: DataFrame, addedUser: Option[DataFrame],
-                           idColumn: String,
-                           mayMove: Boolean, partitions: Int = 8): Unit = {
-    val from = info.snapshot
-    require(from != to, "mutation must target a NEW snapshot id")
-    if (isCommitted(spark, root, to)) return
-    val srcPhys = info.physicalKeys
-    val p0live = p0.distinct.filter(srcPhys.contains)
-    val userFields = info.schema.get.fields.filterNot(f => DerivedCols(f.name))
-    def emptyUser = spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-      StructType(userFields))
-    def srcRows(keys: Seq[GKey]): DataFrame =
-      dataScan(spark, root, info, keys.map(k => k -> srcPhys(k)))
-        .select(userFields.toSeq.map(f => col(f.name)): _*)
-
-    val out0 = withDerived(info, transform(srcRows(p0live)))
-    val (newData, pTouched) =
-      if (!mayMove) (out0, p0.distinct)
-      else {
-        // mover closure: one tiny aggregate over the transformed rows
-        val p1 = keysIn(info, out0)
-        val extra = (p1.toSet -- p0live.toSet).toSeq.filter(srcPhys.contains)
-        (if (extra.isEmpty) out0
-         else out0.unionByName(withDerived(info, srcRows(extra))),
-          (p0 ++ p1).distinct)
-      }
-
-    val pcols = info.partitionCols
-    val dataPath = s"$root/data/snapshot=$to"
-    // shuffle width scales with |touched chunks|, never the table
-    val nParts = math.max(1, math.min(partitions, pTouched.size.max(1)))
-    newData.repartition(nParts, pcols.map(col): _*)
-      .sortWithinPartitions((pcols :+ "xz").map(col): _*)
-      .write.mode("overwrite").partitionBy(pcols: _*).parquet(dataPath)
-
-    // manifest: recompute rewritten chunks from the files just written,
-    // carry untouched ones through by reference
-    val written = spark.read.schema(StructType(info.schema.get.fields)).parquet(dataPath)
-    val writtenParts = written.groupBy(pcols.map(col): _*)
-      .agg(count(lit(1)).as("rows")).collect()
-      .map { r =>
-        val k = if (info.temporal) GKey(Some(r.getInt(0)), r.getLong(1))
-          else GKey(None, r.getLong(0))
-        k -> r.getLong(if (info.temporal) 2 else 1)
-      }.toMap
-    val inherited = (srcPhys.keySet -- pTouched.toSet).toSeq
-    val partitions2 = inherited.map(k => k -> info.partitions(k)).toMap ++ writtenParts
-    val sources2 = inherited.map(k => k -> srcPhys(k)).toMap ++
-      writtenParts.keys.map(_ -> to)
-    commitManifest(spark, root, to, info.m, StructType(info.schema.get.fields),
-      partitions2, Some(sources2), andMarker = false)
-    // delta-scoped attribute-index rebuilds, then the marker LAST — a
-    // crash anywhere re-runs idempotently. The removed/added plans are
-    // lazy CQL-match scans the loop would otherwise re-execute twice
-    // per indexed attribute (review r5b #5) — cache them for its
-    // duration
-    val addedIndexed = withDerived(info, addedUser.getOrElse(emptyUser))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val removedC = removed.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      indexedColumns(spark, root, from).keys.toSeq.sorted.foreach { a =>
-        rebuildIndexScoped(spark, root, from, to, a, removedC, addedIndexed, idColumn, info)
-      }
-      // writer-maintained stats follow the mutation (counts exact,
-      // envelope expand-only from the stored extent columns)
-      TableStats.applyMutationDelta(spark, root, from, to, removedC, addedIndexed,
-        boundsCols = Some(("minx", "miny", "maxx", "maxy")))
-    } finally {
-      removedC.unpersist()
-      addedIndexed.unpersist()
-    }
-    Snapshots.writeString(fs(spark, root), s"$root/_manifests/$to.committed", "")
-  }
+              transform: DataFrame => DataFrame, partitions: Int = 8): Unit =
+    TableEngine.rewrite(spark, root, TableEngine.source(spark, root, fromSnapshot, toSnapshot),
+      toSnapshot, transform, partitions)
 
   /** removeFeatures(filter) on an extent layout — FILE-GRANULAR on
     * chunked snapshots: only the xz_chunk directories holding matched
@@ -571,122 +315,52 @@ object GeomTable {
     * snapshots fall back to the whole-table [[rewrite]]. */
   def deleteWhere(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
                   cql: String, idColumn: String = "id",
-                  props: Map[String, Column] = Map.empty): Unit = {
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    val info = ginfo(spark, root, fromSnapshot)
-    def remove(df: DataFrame): DataFrame =
-      df.where(!cqlPred(df, cql, info.m.geom, idColumn, props))
-    if (!info.chunked) rewrite(spark, root, fromSnapshot, toSnapshot, remove)
-    else {
-      val src = read(spark, root, info)
-      val matched = src.where(cqlPred(src, cql, info.m.geom, idColumn, props))
-      commitScoped(spark, root, info, toSnapshot, keysIn(info, matched), remove,
-        removed = matched, addedUser = None, idColumn = idColumn, mayMove = false)
-    }
-  }
+                  props: Map[String, Column] = Map.empty): Unit =
+    TableEngine.deleteWhere(spark, root, TableEngine.source(spark, root, fromSnapshot, toSnapshot),
+      toSnapshot, cql, idColumn, props)
 
   /** modifyFeatures(attrs, values, filter) — set columns on the rows a
     * CQL filter matches, preserving feature ids. A set that changes the
-    * geometry (or the dtg on a temporal layout) re-homes the row via
-    * the mover closure; setting the geometry to null/empty drops the
-    * row, matching write-time validation. */
+    * geometry (or the dtg on a temporal layout) re-homes the row;
+    * setting the geometry to null/empty drops the row, matching
+    * write-time validation. */
   def updateWhere(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
                   cql: String, sets: Map[String, Column],
-                  idColumn: String = "id", props: Map[String, Column] = Map.empty): Unit = {
-    require(sets.nonEmpty, "updateWhere needs at least one column to set")
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    val info = ginfo(spark, root, fromSnapshot)
-    // materialize the match ONCE: the predicate may reference columns
-    // being set, and folding withColumn would re-evaluate it against
-    // already-updated values for the later sets
-    def update(df: DataFrame): DataFrame = {
-      require(sets.keys.forall(df.columns.contains),
-        s"unknown columns: ${sets.keys.filterNot(df.columns.contains).mkString(", ")}")
-      val matched = df.withColumn("__match", cqlPred(df, cql, info.m.geom, idColumn, props))
-      sets.foldLeft(matched) { case (d, (name, value)) =>
-        d.withColumn(name, when(col("__match"), value).otherwise(col(name)))
-      }.drop("__match")
-    }
-    if (!info.chunked) rewrite(spark, root, fromSnapshot, toSnapshot, update)
-    else {
-      val src = read(spark, root, info)
-      val matched = src.where(cqlPred(src, cql, info.m.geom, idColumn, props))
-      // the added versions apply the sets unconditionally — the same
-      // values commitScoped's transform produces for the matched rows
-      val matchedUser = matched.drop(DerivedCols.toSeq: _*)
-      val added = sets.foldLeft(matchedUser) { case (d, (name, value)) =>
-        d.withColumn(name, value)
-      }
-      commitScoped(spark, root, info, toSnapshot, keysIn(info, matched), update,
-        removed = matched, addedUser = Some(added), idColumn = idColumn, mayMove = true)
-    }
-  }
+                  idColumn: String = "id", props: Map[String, Column] = Map.empty): Unit =
+    TableEngine.updateWhere(spark, root, TableEngine.source(spark, root, fromSnapshot, toSnapshot),
+      toSnapshot, cql, sets, idColumn, props)
 
-  /** Snapshot ids present under the root, committed only (the
-    * SpatialTable.snapshots analog — GeomTable has no secondary
-    * layouts, so every marker/json pair is a snapshot). */
+  /** Writer-with-existing-fids semantics on an extent layout: rows of
+    * `updates` whose id already exists REPLACE the stored row; new ids
+    * append. Old rows are found through an id-index layout when the
+    * table has one, else by one semi-join on the id. */
+  def upsert(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
+             updates: DataFrame, idColumn: String = "id"): Unit =
+    TableEngine.upsert(spark, root, TableEngine.source(spark, root, fromSnapshot, toSnapshot),
+      toSnapshot, updates, idColumn, idLookupLimit = 10000L)
+
+  /** Snapshot ids present under the root, committed only. */
   def snapshots(spark: SparkSession, root: String): Seq[String] =
     Snapshots.committed(spark, root)
 
-  /**
-   * Snapshot GC for extent-table mutation chains — every snapshot NOT
-   * in `keep` and NOT physically referenced (transitively, to a
-   * fixpoint) by a kept snapshot is deleted. Same contract as
-   * [[SpatialTable.expireSnapshots]] via the shared [[Snapshots]]
-   * machinery; legacy snapshots have no sources map, so they are
-   * collectible exactly when unkept and unreferenced. Returns the
-   * expired ids.
-   */
-  def expireSnapshots(spark: SparkSession, root: String, keep: Seq[String]): Seq[String] = {
-    val f = fs(spark, root)
-    val indexNames =
-      if (!f.exists(new Path(root))) Seq.empty
-      else f.listStatus(new Path(root)).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("index_"))
-    Snapshots.expire(spark, root, keep,
-      refs = id => referencedSnapshots(spark, root, id),
-      artifacts = { id =>
-        val rest =
-          if (!f.exists(new Path(s"$root/_manifests"))) Seq.empty
-          else f.listStatus(new Path(s"$root/_manifests")).toSeq.map(_.getPath.getName)
-            .filter(n => n == s"$id.json" || n.startsWith(s"$id.attr_"))
-            .map(n => s"$root/_manifests/$n")
-        Seq(s"$root/data/snapshot=$id", s"$root/_stats/$id.json") ++
-          indexNames.map(d => s"$root/$d/snapshot=$id") ++ rest
-      })
-  }
+  /** Snapshot GC for extent-table mutation chains
+    * ([[TableEngine.expireSnapshots]]); legacy snapshots have no sources
+    * map, so they are collectible exactly when unkept and unreferenced.
+    * Returns the expired ids. */
+  def expireSnapshots(spark: SparkSession, root: String, keep: Seq[String]): Seq[String] =
+    TableEngine.expireSnapshots(spark, root, keep)
 
   // ---- attribute-index layouts (schema-generic AttributeIndex parity) --
   //
   // The reference's attribute index applies to ANY feature type — a
   // polygon table gets attr-keyed rows exactly like a point table
   // (geomesa-index-api/.../attribute/AttributeIndex.scala is
-  // geometry-agnostic). Same physical shape as SpatialTable's: a copy
-  // of the snapshot bucketed by hash(attr) and sorted (attr, xz) inside
-  // each file — bucket-directory pruning + row-group min/max skipping
-  // on the sorted attribute; the secondary xz sort keeps the scan
-  // spatially clustered for attr+bbox combinations. Mutations rebuild
-  // only the buckets where a mutated row's old/new value hashes, the
-  // rest inherit by reference through a sources sidecar.
+  // geometry-agnostic): the engine's layout, sorted (attr, xz) inside
+  // each file, so the secondary scan stays spatially clustered.
 
   def writeAttributeIndex(spark: SparkSession, root: String, snapshotId: String,
-                          attrCol: String, buckets: Int = 16): Unit = {
-    val f = fs(spark, root)
-    val marker = Snapshots.indexMarkerPath(root, snapshotId, attrCol)
-    if (f.exists(new Path(marker))) return // resume: done
-    read(spark, root, snapshotId)
-      .withColumn("attr_bucket", pmod(xxhash64(col(attrCol)), lit(buckets)).cast("int"))
-      .repartition(buckets, col("attr_bucket"))
-      .sortWithinPartitions(col("attr_bucket"), col(attrCol), col("xz"))
-      .write.mode("overwrite")
-      .partitionBy("attr_bucket")
-      .parquet(s"$root/index_$attrCol/snapshot=$snapshotId")
-    // the marker records the WRITTEN bucket modulus — readers must
-    // never probe with a guessed one (silent empty results)
-    Snapshots.writeString(f, marker, buckets.toString)
-  }
+                          attrCol: String, buckets: Int = 16): Unit =
+    TableEngine.writeAttributeIndex(spark, root, snapshotId, attrCol, buckets, tierCol = None)
 
   def indexBuckets(spark: SparkSession, root: String, snapshotId: String,
                    attrCol: String): Option[Int] =
@@ -697,145 +371,37 @@ object GeomTable {
                      snapshotId: String): Map[String, Option[Int]] =
     Snapshots.indexedColumns(spark, root, snapshotId)
 
-  /** Index layout scan, planned like [[read]] (Snapshots.indexRead).
-    * Legacy manifests carry no schema; their layouts read by directory. */
-  private[graft] def indexRead(spark: SparkSession, root: String, info: GInfo,
+  /** Index layout scan, planned like [[read]]. */
+  private[graft] def indexRead(spark: SparkSession, root: String, info: TableManifest[Manifest],
                                attr: String): DataFrame =
-    if (!info.chunked) spark.read.parquet(s"$root/index_$attr/snapshot=${info.snapshot}")
-    else Snapshots.indexRead(spark, root, info.snapshot, attr, info.readSchema)
+    TableEngine.indexRead(spark, root, info, attr)
 
   /** Equality scan through the attribute index: plan-time bucket
     * pruning + sorted-attr row-group skipping. The probe literal casts
-    * to the column's type first — xxhash64 hashes by TYPE, and a
-    * mismatched literal silently finds nothing. */
+    * to the column's type first — for the bucket hash (xxhash64 hashes
+    * by TYPE, and a mismatched literal silently finds nothing) and for
+    * the equality. */
   def readByAttribute(spark: SparkSession, root: String, snapshotId: String,
-                      attrCol: String, value: Any): DataFrame = {
-    val info = ginfo(spark, root, snapshotId)
-    readByAttribute(spark, root, info, attrCol, value,
+                      attrCol: String, value: Any): DataFrame =
+    readByAttribute(spark, root, ginfo(spark, root, snapshotId), attrCol, value,
       indexBuckets(spark, root, snapshotId, attrCol))
-  }
 
-  /** Parsed-manifest overload (the relation caches GInfo and the
-    * bucket moduli at construction — review r5b #4: the equality route
-    * must not re-parse metadata per scan). */
-  private[graft] def readByAttribute(spark: SparkSession, root: String, info: GInfo,
-                                     attrCol: String, value: Any,
+  /** Parsed-manifest overload (the relation caches the manifest and the
+    * bucket moduli at construction — the equality route must not
+    * re-parse metadata per scan). */
+  private[graft] def readByAttribute(spark: SparkSession, root: String,
+                                     info: TableManifest[Manifest], attrCol: String, value: Any,
                                      buckets: Option[Int]): DataFrame = {
     val idx = indexRead(spark, root, info, attrCol)
-    val typed = lit(value).cast(idx.schema(attrCol).dataType)
-    val pruned = buckets match {
-      case Some(n) => idx.where(col("attr_bucket") ===
-        pmod(xxhash64(typed), lit(n)).cast("int"))
-      case None => idx
-    }
-    pruned.where(col(attrCol) === typed)
-  }
-
-  /** Delta-scoped index rebuild for a mutation: only the attr_buckets
-    * where a mutated row's old/new value hashes are rewritten; every
-    * untouched bucket is inherited by reference through the sources
-    * sidecar (the SpatialTable.rebuildIndexScoped pattern in the XZ key
-    * space). */
-  private def rebuildIndexScoped(spark: SparkSession, root: String, from: String, to: String,
-                                 attr: String, removed: DataFrame, addedIndexed: DataFrame,
-                                 idColumn: String, info: GInfo): Unit = {
-    val f = fs(spark, root)
-    val marker = Snapshots.indexMarkerPath(root, to, attr)
-    if (f.exists(new Path(marker))) return // resume: done
-    val n = indexBuckets(spark, root, from, attr).getOrElse(16)
-    def bucketOf(c: Column) = pmod(xxhash64(c), lit(n)).cast("int")
-    val affected: Set[Int] =
-      removed.select(bucketOf(col(attr)).as("b"))
-        .unionByName(addedIndexed.select(bucketOf(col(attr)).as("b")))
-        .distinct().collect().map(_.getInt(0)).toSet
-    val phys = Snapshots.indexPhysical(spark, root, from, attr)
-    val order = info.readOrder :+ "attr_bucket"
-    val rebuildOld = affected.intersect(phys.keySet).toSeq.sorted
-    if (affected.nonEmpty) {
-      val oldRows =
-        if (rebuildOld.isEmpty) None
-        else Some(Snapshots.indexScan(spark, root, attr, info.readSchema,
-            rebuildOld.map(b => b -> phys(b)))
-          .join(removed.select(col(idColumn)).distinct(), Seq(idColumn), "left_anti")
-          .select(order.map(col): _*))
-      val addedRows = addedIndexed.withColumn("attr_bucket", bucketOf(col(attr)))
-        .select(order.map(col): _*)
-      val union = oldRows.map(_.unionByName(addedRows)).getOrElse(addedRows)
-      union.repartition(math.max(1, affected.size), col("attr_bucket"))
-        .sortWithinPartitions(col("attr_bucket"), col(attr), col("xz"))
-        .write.mode("overwrite").partitionBy("attr_bucket")
-        .parquet(s"$root/index_$attr/snapshot=$to")
-    }
-    val sourcesMap: Map[Int, String] =
-      (phys -- affected) ++ Snapshots.listedBuckets(spark, root, to, attr).map(_ -> to)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    val srcs = node.putObject("sources")
-    sourcesMap.toSeq.sortBy(_._1).foreach { case (b, s) => srcs.put(b.toString, s) }
-    Snapshots.writeString(f, Snapshots.indexSourcesPath(root, to, attr),
-      mapper.writeValueAsString(node))
-    Snapshots.writeString(f, marker, n.toString)
+    TableEngine.bucketOf(idx, attrCol, value, buckets)
+      .where(col(attrCol) === TableEngine.typedLit(idx, attrCol, value))
   }
 
   /** Every snapshot whose PHYSICAL files snapshot `id` still reads
-    * (excluding itself) — the overwrite-safety / GC edge set: the data
-    * sources map plus each delta-rebuilt index sidecar's values. */
-  def referencedSnapshots(spark: SparkSession, root: String, id: String): Set[String] = {
-    val dataRefs = ginfo(spark, root, id).sources.values.toSet
-    val idxRefs = indexedColumns(spark, root, id).keys
-      .flatMap(a => Snapshots.indexPhysical(spark, root, id, a).values).toSet
-    (dataRefs ++ idxRefs) - id
-  }
+    * ([[TableEngine.referencedSnapshots]]). */
+  def referencedSnapshots(spark: SparkSession, root: String, id: String): Set[String] =
+    TableEngine.referencedSnapshots(spark, root, id)
 
   /** removeSchema analog: drop the whole table root. */
-  def dropTable(spark: SparkSession, root: String): Unit = {
-    val f = fs(spark, root)
-    val p = new Path(root)
-    if (f.exists(p)) require(f.delete(p, true), s"failed to delete $root")
-  }
-
-  /**
-   * Writer-with-existing-fids semantics on an extent layout: rows of
-   * `updates` whose id already exists REPLACE the stored row; new ids
-   * append. Old-row location is one semi-join on the id (GeomTable has
-   * no secondary id layout — the primary scan is the index); new rows'
-   * homes derive without touching the table.
-   */
-  def upsert(spark: SparkSession, root: String, fromSnapshot: String, toSnapshot: String,
-             updates: DataFrame, idColumn: String = "id"): Unit = {
-    require(fromSnapshot != toSnapshot, "mutation must target a NEW snapshot id")
-    require(isCommitted(spark, root, fromSnapshot), s"source snapshot $fromSnapshot not committed")
-    val info = ginfo(spark, root, fromSnapshot)
-    val incoming = updates.drop(DerivedCols.toSeq: _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dups = incoming.groupBy(idColumn).agg(count(lit(1)).as("n"))
-        .where(col("n") > 1).select(idColumn).limit(5)
-        .collect().map(_.get(0)).toSeq
-      require(dups.isEmpty,
-        s"upsert batch has duplicate ids (unordered rows — last-wins is " +
-          s"undefined): ${dups.mkString(", ")}")
-      def merge(df: DataFrame): DataFrame = {
-        require(df.columns.sorted.sameElements(incoming.columns.sorted),
-          s"upsert schema mismatch: table has [${df.columns.sorted.mkString(",")}], " +
-            s"updates have [${incoming.columns.sorted.mkString(",")}]")
-        df.join(incoming.select(idColumn).distinct(), Seq(idColumn), "left_anti")
-          .unionByName(incoming)
-      }
-      if (!info.chunked) rewrite(spark, root, fromSnapshot, toSnapshot, merge)
-      else {
-        val userCols = info.schema.get.fieldNames.filterNot(DerivedCols).sorted
-        require(userCols.sameElements(incoming.columns.sorted),
-          s"upsert schema mismatch: table has [${userCols.mkString(",")}], " +
-            s"updates have [${incoming.columns.sorted.mkString(",")}]")
-        val oldRows = read(spark, root, info)
-          .join(incoming.select(idColumn).distinct(), Seq(idColumn), "left_semi")
-        val pOld = keysIn(info, oldRows)
-        val pNew = keysIn(info, withDerived(info, incoming))
-        commitScoped(spark, root, info, toSnapshot, pOld ++ pNew, merge,
-          removed = oldRows, addedUser = Some(incoming), idColumn = idColumn,
-          mayMove = false)
-      }
-    } finally incoming.unpersist()
-  }
+  def dropTable(spark: SparkSession, root: String): Unit = TableEngine.dropTable(spark, root)
 }

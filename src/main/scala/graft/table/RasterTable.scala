@@ -3,7 +3,6 @@ package graft.table
 import java.math.{MathContext, RoundingMode}
 
 import graft.cells.{GeoHash, GeoHashOps}
-import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -67,11 +66,8 @@ object RasterTable {
     truncateRes(java.lang.Double.longBitsToDouble(bits))
   }
 
-  private def fs(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   def isCommitted(spark: SparkSession, root: String, snapshotId: String): Boolean =
-    fs(spark, root).exists(new Path(s"$root/_manifests/$snapshotId.committed"))
+    TableEngine.isCommitted(spark, root, snapshotId)
 
   /**
    * Write a chunk snapshot. `df` must carry `rid` (chunk id), the
@@ -117,10 +113,7 @@ object RasterTable {
       .coalesce(1)
       .write.mode("overwrite").parquet(s"$root/bounds/snapshot=$snapshotId")
 
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_manifests"))
-    val out = f.create(new Path(s"$root/_manifests/$snapshotId.committed"), true)
-    out.close()
+    Snapshots.writeString(TableEngine.fs(spark, root), s"$root/_manifests/$snapshotId.committed", "")
   }
 
   /** res truncation as a Column (4-sig-digit FLOOR is not a SQL

@@ -1,57 +1,58 @@
 package graft.table
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /**
- * The snapshot-store mechanics both table kinds share (review r5 #7:
- * SpatialTable and GeomTable each carried their own copy of the
- * committed-snapshot listing and the GC fixpoint — a future fix to
- * either would have had to land in both or the table kinds silently
- * diverge). Layout contract: `<root>/_manifests/<id>.json` plus a
- * `<id>.committed` marker written LAST. The secondary index layouts'
- * markers, sources sidecars and planned reads live here for the same
- * reason.
+ * The snapshot-store mechanics under [[TableEngine]]: the
+ * committed-snapshot listing, the GC fixpoint and the list of a
+ * snapshot's artifacts, atomic metadata writes, and the secondary index
+ * layouts' markers, sources sidecars and planned reads. Layout
+ * contract: `<root>/_manifests/<id>.json` plus a `<id>.committed`
+ * marker written LAST.
  */
-private[table] object Snapshots {
+private[graft] object Snapshots {
 
-  /** Snapshot ids present under the root, committed only: a marker
-    * counts only with its matching manifest (secondary index layouts
-    * commit markers in the same directory without one). */
-  def committed(spark: SparkSession, root: String): Seq[String] = {
-    val f = fs(spark, root)
+  /** Snapshot ids present under the root, committed only. */
+  def committed(spark: SparkSession, root: String): Seq[String] =
+    markers(spark, root).map(_.getPath.getName.stripSuffix(".committed")).sorted
+
+  /** The commit markers of committed snapshots: a marker counts only
+    * with its matching manifest (secondary index layouts commit markers
+    * in the same directory without one). */
+  def markers(spark: SparkSession, root: String): Seq[FileStatus] = {
+    val f = TableEngine.fs(spark, root)
     val dir = new Path(s"$root/_manifests")
     if (!f.exists(dir)) Seq.empty
     else {
-      val names = f.listStatus(dir).map(_.getPath.getName).toSet
-      names.filter(_.endsWith(".committed")).map(_.stripSuffix(".committed"))
-        .filter(id => names.contains(s"$id.json")).toSeq.sorted
+      val statuses = f.listStatus(dir).toSeq
+      val names = statuses.map(_.getPath.getName).toSet
+      statuses.filter { st =>
+        val n = st.getPath.getName
+        n.endsWith(".committed") && names.contains(n.stripSuffix(".committed") + ".json")
+      }
     }
   }
 
   /**
    * Marker-first snapshot GC with FIXPOINT reachability: every snapshot
    * NOT in `keep` and NOT (transitively) referenced by a retained
-   * snapshot is deleted — each deletion removes the commit marker
-   * FIRST, so a crash mid-expiry leaves an uncommitted (invisible)
-   * snapshot, never a committed one missing files. `refs(id)` is the
-   * by-reference edge set (physical holders this snapshot still reads);
-   * `artifacts(id)` lists everything else to delete (data dirs, the
-   * manifest json, sidecars). Returns the expired ids.
+   * snapshot is deleted ([[delete]]). `refs(id)` is the by-reference
+   * edge set (physical holders this snapshot still reads). Returns the
+   * expired ids.
    */
   def expire(spark: SparkSession, root: String, keep: Seq[String],
-             refs: String => Set[String],
-             artifacts: String => Seq[String]): Seq[String] = {
+             refs: String => Set[String]): Seq[String] = {
     val all = committed(spark, root)
     val missing = keep.filterNot(all.contains)
     require(missing.isEmpty, s"cannot keep unknown snapshot(s): ${missing.mkString(", ")}")
     require(keep.nonEmpty, "keep at least one snapshot (use dropTable to delete everything)")
-    // reachability to a fixpoint over the whole retained set (ADVICE
-    // r4): a snapshot retained only because a kept one reads its files
-    // may itself reference a third — every LISTED snapshot must keep
-    // answering, so the retained set closes transitively (flattened
-    // sources maps make each step one hop)
+    // reachability to a fixpoint over the whole retained set: a snapshot
+    // retained only because a kept one reads its files may itself
+    // reference a third — every LISTED snapshot must keep answering, so
+    // the retained set closes transitively (flattened sources maps make
+    // each step one hop)
     var retain = keep.toSet
     var frontier = keep.toSet
     while (frontier.nonEmpty) {
@@ -60,18 +61,42 @@ private[table] object Snapshots {
       frontier = next
     }
     val drop = all.filterNot(retain)
-    val f = fs(spark, root)
-    drop.foreach { id =>
-      f.delete(new Path(s"$root/_manifests/$id.committed"), false)
-      artifacts(id).foreach(p => f.delete(new Path(p), true))
-    }
+    delete(spark, root, drop)
     drop
   }
 
+  /** Deletes snapshots: each one's commit marker FIRST, so a crash
+    * midway leaves an uncommitted (invisible) snapshot, never a
+    * committed one missing files; then everything else it owns — data,
+    * `_metrics`, stats, every index layout, the manifest, index markers
+    * and sidecars, and hidden siblings a crashed metadata write left. */
+  def delete(spark: SparkSession, root: String, ids: Seq[String]): Unit = {
+    val f = TableEngine.fs(spark, root)
+    val indexDirs = names(spark, root).filter(_.startsWith("index_"))
+    val metadata = names(spark, s"$root/_manifests")
+    ids.foreach { id =>
+      f.delete(new Path(s"$root/_manifests/$id.committed"), false)
+      (Seq(s"$root/data/snapshot=$id", s"$root/_metrics/snapshot=$id",
+        s"$root/_stats/$id.json", s"$root/_stats/.$id.json.tmp") ++
+        indexDirs.map(d => s"$root/$d/snapshot=$id") ++
+        metadata.filter(n => n == s"$id.json" || n.startsWith(s"$id.attr_") ||
+          n.startsWith(s".$id.")).map(n => s"$root/_manifests/$n"))
+        .foreach(p => f.delete(new Path(p), true))
+    }
+  }
+
+  /** Writes a small metadata file atomically: to a hidden sibling that
+    * is then renamed over the target, so neither a reader nor a crash
+    * ever sees it half-written (rename replaces the target on local and
+    * POSIX file systems; where a store refuses to, the target is deleted
+    * first). */
   def writeString(f: FileSystem, path: String, s: String): Unit = {
-    val out = f.create(new Path(path), true)
-    out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
+    val dst = new Path(path)
+    val tmp = new Path(dst.getParent, s".${dst.getName}.tmp")
+    val out = f.create(tmp, true)
+    try out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8)) finally out.close()
+    if (!f.rename(tmp, dst) && !(f.delete(dst, false) && f.rename(tmp, dst)))
+      throw new java.io.IOException(s"cannot move $tmp to $dst")
   }
 
   def readString(f: FileSystem, p: Path): String = {
@@ -104,7 +129,7 @@ private[table] object Snapshots {
     * before its marker recorded the bucket count. */
   def indexMarker(spark: SparkSession, root: String, id: String,
                   attr: String): Option[Seq[String]] =
-    try Some(readString(fs(spark, root), new Path(indexMarkerPath(root, id, attr)))
+    try Some(readString(TableEngine.fs(spark, root), new Path(indexMarkerPath(root, id, attr)))
       .trim.linesIterator.toSeq)
     catch { case _: java.io.FileNotFoundException => None }
 
@@ -114,10 +139,7 @@ private[table] object Snapshots {
   /** Committed index layouts of a snapshot: attribute -> bucket modulus,
     * each marker read once. */
   def indexedColumns(spark: SparkSession, root: String, id: String): Map[String, Option[Int]] = {
-    val f = fs(spark, root)
-    val rootPath = new Path(root)
-    if (!f.exists(rootPath)) Map.empty
-    else f.listStatus(rootPath).toSeq.map(_.getPath.getName)
+    names(spark, root)
       .collect { case n if n.startsWith("index_") => n.stripPrefix("index_") }
       .flatMap(a => indexMarker(spark, root, id, a).map(m => a -> bucketsOf(m)))
       .toMap
@@ -127,7 +149,7 @@ private[table] object Snapshots {
     * sidecar); None for a self-contained layout. */
   private def indexSources(spark: SparkSession, root: String, id: String,
                            attr: String): Option[Map[Int, String]] = {
-    val f = fs(spark, root)
+    val f = TableEngine.fs(spark, root)
     val jp = new Path(indexSourcesPath(root, id, attr))
     if (!f.exists(jp)) None
     else {
@@ -141,13 +163,9 @@ private[table] object Snapshots {
 
   /** The bucket directories a layout's own snapshot directory holds. */
   def listedBuckets(spark: SparkSession, root: String, id: String,
-                    attr: String): Seq[Int] = {
-    val f = fs(spark, root)
-    val dir = new Path(s"$root/index_$attr/snapshot=$id")
-    if (!f.exists(dir)) Seq.empty
-    else f.listStatus(dir).toSeq.map(_.getPath.getName)
+                    attr: String): Seq[Int] =
+    names(spark, s"$root/index_$attr/snapshot=$id")
       .collect { case s if s.startsWith("attr_bucket=") => s.stripPrefix("attr_bucket=").toInt }
-  }
 
   /** bucket -> physical snapshot: the sources sidecar when the layout was
     * delta-rebuilt, else its own directory listing (self-contained). */
@@ -173,6 +191,10 @@ private[table] object Snapshots {
         (Seq(b), s"$root/index_$attr/snapshot=$src/attr_bucket=$b")
       })
 
-  private def fs(spark: SparkSession, p: String): FileSystem =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  /** The entries of a directory; none when it does not exist. */
+  private def names(spark: SparkSession, dir: String): Seq[String] = {
+    val f = TableEngine.fs(spark, dir)
+    if (!f.exists(new Path(dir))) Seq.empty
+    else f.listStatus(new Path(dir)).toSeq.map(_.getPath.getName)
+  }
 }

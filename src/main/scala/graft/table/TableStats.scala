@@ -57,14 +57,11 @@ object TableStats {
                          attributes: Map[String, AttributeStat],
                          deleted: Long = 0L, stale: Boolean = false)
 
-  private def fs(spark: SparkSession, p: String) =
-    new Path(p).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
   private def statsPath(root: String, snapshotId: String) =
     s"$root/_stats/$snapshotId.json"
 
   def exists(spark: SparkSession, root: String, snapshotId: String): Boolean =
-    fs(spark, root).exists(new Path(statsPath(root, snapshotId)))
+    TableEngine.fs(spark, root).exists(new Path(statsPath(root, snapshotId)))
 
   /** Render a stat value losslessly enough to order/compare after a
     * round-trip: timestamps as UTC micros, everything else as its
@@ -97,19 +94,29 @@ object TableStats {
     collectDf(spark, GeomTable.read(spark, root, snapshotId), root, snapshotId,
       attributes, ("minx", "miny", "maxx", "maxy"), topK)
 
-  /** `bcols` = (minXCol, minYCol, maxXCol, maxYCol): point tables pass
-    * (lon, lat, lon, lat) — min/max of the same column pair — extent
-    * tables their four stored envelope columns. */
-  private def collectDf(spark: SparkSession, df0: DataFrame, root: String,
-                        snapshotId: String, attributes: Seq[String],
-                        bcols: (String, String, String, String), topK: Int): Unit = {
-    // one disk read total: the main agg plus each tracked attribute's
-    // TopK groupBy all scan the persisted copy, not the parquet N+1 times
-    // (writeConfigured/rewrite call this on every write and mutation)
-    val df = df0.persist()
-    val tracked = attributes.filter(df.columns.contains)
-    val spatial = Seq(bcols._1, bcols._2, bcols._3, bcols._4)
-      .forall(df.columns.contains)
+  /** Stats for a snapshot of either table kind, the envelope from the
+    * layout's bounds columns. */
+  private[table] def collectLayout(spark: SparkSession, root: String, snapshotId: String,
+                                   attributes: Seq[String], layout: KeyLayout): Unit =
+    collectDf(spark, TableEngine.read(spark, root, TableEngine.manifest(spark, root, snapshotId)),
+      root, snapshotId, attributes, layout.boundsCols, topK = 10)
+
+  /** One attribute's aggregates: rendered min/max (None without a
+    * non-null value), non-null count, approximate cardinality and the
+    * HLL sketch over the rendered values. */
+  private final case class AttrAgg(min: Option[String], max: Option[String], count: Long,
+                                   card: Long, hll: Option[Array[Byte]])
+
+  /** ONE aggregation over `df`: the row count, the envelope of `bcols`
+    * when the frame has them (and rows), and every tracked attribute it
+    * has. `bcols` = (minXCol, minYCol, maxXCol, maxYCol): point tables
+    * pass (lon, lat, lon, lat) — min/max of the same column pair —
+    * extent tables their four stored envelope columns. */
+  private def aggregate(df: DataFrame, tracked: Seq[String],
+                        bcols: (String, String, String, String)):
+      (Long, Option[(Double, Double, Double, Double)], Map[String, AttrAgg]) = {
+    val spatial = Seq(bcols._1, bcols._2, bcols._3, bcols._4).forall(df.columns.contains)
+    val present = tracked.filter(df.columns.contains)
     val aggs =
       Seq(count(lit(1)).as("count")) ++
         // envelope as double regardless of the column's numeric type
@@ -118,7 +125,7 @@ object TableStats {
           min(col(bcols._2).cast("double")).as("miny"),
           max(col(bcols._3).cast("double")).as("maxx"),
           max(col(bcols._4).cast("double")).as("maxy")) else Nil) ++
-        tracked.flatMap { a =>
+        present.flatMap { a =>
           val dt = df.schema(a).dataType
           Seq(render(dt, min(col(a))).as(s"min_$a"), render(dt, max(col(a))).as(s"max_$a"),
             count(col(a)).as(s"count_$a"), approx_count_distinct(col(a)).as(s"card_$a"),
@@ -128,54 +135,83 @@ object TableStats {
             // MetadataBackedStats stores exactly this sketch)
             hll_sketch_agg(render(dt, col(a))).as(s"hll_$a"))
         }
-    val (row, tops) = try {
-      val r = df.agg(aggs.head, aggs.tail: _*).collect().head
-      val total = r.getLong(r.fieldIndex("count"))
-      val t: Map[String, Seq[(String, Long)]] =
-        if (total == 0) Map.empty
-        else tracked.map { a =>
-          val dt = df.schema(a).dataType
-          a -> df.where(col(a).isNotNull)
-            .groupBy(render(dt, col(a)).as("v")).agg(count(lit(1)).as("n"))
-            .orderBy(desc("n"), asc("v")).limit(topK).collect()
-            .map(r => (r.getString(0), r.getLong(1))).toSeq
-        }.toMap
-      (r, t)
-    } finally df.unpersist()
-    val total = row.getLong(row.fieldIndex("count"))
+    val r = df.agg(aggs.head, aggs.tail: _*).collect().head
+    val n = r.getLong(r.fieldIndex("count"))
+    val env = if (spatial && n > 0)
+      Some((r.getDouble(r.fieldIndex("minx")), r.getDouble(r.fieldIndex("miny")),
+        r.getDouble(r.fieldIndex("maxx")), r.getDouble(r.fieldIndex("maxy"))))
+    else None
+    val attrs = present.map { a =>
+      val cnt = r.getLong(r.fieldIndex(s"count_$a"))
+      a -> AttrAgg(Option(r.getString(r.fieldIndex(s"min_$a"))).filter(_ => cnt > 0),
+        Option(r.getString(r.fieldIndex(s"max_$a"))).filter(_ => cnt > 0),
+        cnt, r.getLong(r.fieldIndex(s"card_$a")),
+        Option(r.getAs[Array[Byte]](r.fieldIndex(s"hll_$a"))))
+    }.toMap
+    (n, env, attrs)
+  }
 
+  private def collectDf(spark: SparkSession, df0: DataFrame, root: String,
+                        snapshotId: String, attributes: Seq[String],
+                        bcols: (String, String, String, String), topK: Int): Unit = {
+    // one disk read total: the main agg plus each tracked attribute's
+    // TopK groupBy all scan the persisted copy, not the parquet N+1 times
+    // (writeConfigured/rewrite call this on every write and mutation)
+    val df = df0.persist()
+    val tracked = attributes.filter(df.columns.contains)
+    val ((total, env, attrs), tops) = try {
+      val agg = aggregate(df, tracked, bcols)
+      val t: Map[String, Seq[(String, Long)]] =
+        if (agg._1 == 0) Map.empty
+        else tracked.map(a => a -> valueCounts(df, a).orderBy(desc("n"), asc("v")).limit(topK)
+          .collect().map(r => (r.getString(0), r.getLong(1))).toSeq).toMap
+      (agg, t)
+    } finally df.unpersist()
+
+    writeStats(spark, root, Stats(snapshotId, total, env, attrs.map { case (a, g) =>
+      a -> AttributeStat(g.min.orNull, g.max.orNull, g.count, g.card,
+        df.schema(a).dataType.simpleString, tops.getOrElse(a, Nil),
+        g.hll.map(java.util.Base64.getEncoder.encodeToString))
+    }), tracked, withDeletions = false)
+  }
+
+  /** Serialize stats into place; `order` is the attribute order, and
+    * mutation deltas also record their deletion tally. */
+  private def writeStats(spark: SparkSession, root: String, st: Stats, order: Seq[String],
+                         withDeletions: Boolean): Unit = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val node = mapper.createObjectNode()
-    node.put("snapshot", snapshotId)
-    node.put("count", total)
-    if (spatial && total > 0) {
-      val b = node.putArray("bounds")
-      Seq("minx", "miny", "maxx", "maxy").foreach(f =>
-        b.add(row.getDouble(row.fieldIndex(f))))
+    node.put("snapshot", st.snapshot)
+    node.put("count", st.count)
+    if (withDeletions) {
+      node.put("deleted", st.deleted)
+      node.put("stale", st.stale)
+    }
+    st.bounds.foreach { b =>
+      val arr = node.putArray("bounds")
+      arr.add(b._1); arr.add(b._2); arr.add(b._3); arr.add(b._4)
     }
     val attrsNode = node.putObject("attributes")
-    tracked.foreach { a =>
+    order.foreach { a =>
+      val at = st.attributes(a)
       val n = attrsNode.putObject(a)
-      val cnt = row.getLong(row.fieldIndex(s"count_$a"))
-      n.put("count", cnt)
-      n.put("cardinality", row.getLong(row.fieldIndex(s"card_$a")))
-      n.put("type", df.schema(a).dataType.simpleString)
-      if (cnt > 0) {
-        n.put("min", row.getString(row.fieldIndex(s"min_$a")))
-        n.put("max", row.getString(row.fieldIndex(s"max_$a")))
-      }
-      Option(row.getAs[Array[Byte]](row.fieldIndex(s"hll_$a"))).foreach(b =>
-        n.put("hll", java.util.Base64.getEncoder.encodeToString(b)))
+      n.put("count", at.count)
+      n.put("cardinality", at.cardinality)
+      n.put("type", at.dataType)
+      if (at.count > 0) { Option(at.min).foreach(n.put("min", _)); Option(at.max).foreach(n.put("max", _)) }
+      at.hll.foreach(n.put("hll", _))
       val tk = n.putArray("topk")
-      tops.getOrElse(a, Nil).foreach { case (v, c) =>
-        val e = tk.addArray(); e.add(v); e.add(c)
-      }
+      at.topK.foreach { case (v, c) => val e = tk.addArray(); e.add(v); e.add(c) }
     }
-    val f = fs(spark, root)
+    val f = TableEngine.fs(spark, root)
     f.mkdirs(new Path(s"$root/_stats"))
-    val out = f.create(new Path(statsPath(root, snapshotId)), true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8")) finally out.close()
+    Snapshots.writeString(f, statsPath(root, st.snapshot), mapper.writeValueAsString(node))
   }
+
+  /** (rendered value `v`, rows `n`) of an attribute's non-null values. */
+  private def valueCounts(df: DataFrame, a: String): DataFrame =
+    df.where(col(a).isNotNull).groupBy(render(df.schema(a).dataType, col(a)).as("v"))
+      .agg(count(lit(1)).as("n"))
 
   /** Render-domain compare: timestamps render as micros and numerics as
     * their canonical form, so anything non-string compares numerically;
@@ -196,56 +232,22 @@ object TableStats {
    * them — exactly the reference's semantics, where an exact refresh
    * requires a stats re-collect / StatsScan); topK merges the added
    * rows' value counts into the stored sketch (approximate, as the
-   * reference's TopK combine is); cardinality keeps the larger of the
-   * stored estimate and the added rows' own (a lower bound — HLL
-   * sketches are not stored, so union is not available; re-collect for
-   * exact). One tiny aggregate over each of `removed`/`added` — never a
-   * table scan. No-op when the source snapshot has no stats.
+   * reference's TopK combine is); cardinality unions the stored HLL
+   * sketch with the added rows' (sidecars from before sketches keep the
+   * larger of the two estimates, a lower bound). `bcols` are the
+   * layout's envelope columns. One tiny aggregate over each of
+   * `removed`/`added` — never a table scan. No-op when the source
+   * snapshot has no stats.
    */
   def applyMutationDelta(spark: SparkSession, root: String, fromSnapshot: String,
                          toSnapshot: String, removed: DataFrame, added: DataFrame,
-                         lonCol: String = "lon", latCol: String = "lat",
-                         topK: Int = 10, staleFraction: Double = 0.5,
-                         boundsCols: Option[(String, String, String, String)] = None): Unit = {
+                         bcols: (String, String, String, String),
+                         topK: Int = 10, staleFraction: Double = 0.5): Unit = {
     val st = cached(spark, root, fromSnapshot).getOrElse(return)
     val tracked = st.attributes.keys.toSeq.sorted
-    // envelope columns: point tables min/max the same lon/lat pair,
-    // extent tables pass their four stored envelope columns
-    val bcols = boundsCols.getOrElse((lonCol, latCol, lonCol, latCol))
 
-    def deltaOf(df: DataFrame): (Long, Option[(Double, Double, Double, Double)],
-        Map[String, (Option[String], Option[String], Long, Long, Option[Array[Byte]])]) = {
-      val spatial = Seq(bcols._1, bcols._2, bcols._3, bcols._4)
-        .forall(df.columns.contains)
-      val present = tracked.filter(df.columns.contains)
-      val aggs = Seq(count(lit(1)).as("n")) ++
-        (if (spatial) Seq(min(col(bcols._1).cast("double")).as("minx"),
-          min(col(bcols._2).cast("double")).as("miny"),
-          max(col(bcols._3).cast("double")).as("maxx"),
-          max(col(bcols._4).cast("double")).as("maxy")) else Nil) ++
-        present.flatMap { a =>
-          val dt = df.schema(a).dataType
-          Seq(render(dt, min(col(a))).as(s"min_$a"), render(dt, max(col(a))).as(s"max_$a"),
-            count(col(a)).as(s"n_$a"), approx_count_distinct(col(a)).as(s"card_$a"),
-            hll_sketch_agg(render(dt, col(a))).as(s"hll_$a"))
-        }
-      val r = df.agg(aggs.head, aggs.tail: _*).collect().head
-      val n = r.getLong(r.fieldIndex("n"))
-      val env = if (spatial && n > 0)
-        Some((r.getDouble(r.fieldIndex("minx")), r.getDouble(r.fieldIndex("miny")),
-          r.getDouble(r.fieldIndex("maxx")), r.getDouble(r.fieldIndex("maxy"))))
-      else None
-      val attrs = present.map { a =>
-        val cnt = r.getLong(r.fieldIndex(s"n_$a"))
-        a -> (Option(r.getString(r.fieldIndex(s"min_$a"))).filter(_ => cnt > 0),
-          Option(r.getString(r.fieldIndex(s"max_$a"))).filter(_ => cnt > 0),
-          cnt, r.getLong(r.fieldIndex(s"card_$a")),
-          Option(r.getAs[Array[Byte]](r.fieldIndex(s"hll_$a"))).filter(_ => cnt > 0))
-      }.toMap
-      (n, env, attrs)
-    }
-    val (remN, _, remAttrs) = deltaOf(removed)
-    val (addN, addEnv, addAttrs) = deltaOf(added)
+    val (remN, _, remAttrs) = aggregate(removed, tracked, bcols)
+    val (addN, addEnv, addAttrs) = aggregate(added, tracked, bcols)
 
     /** Union the stored sketch with the added rows' — the reference's
       * MetadataBackedStats HLL merge; deletes cannot subtract (neither
@@ -279,9 +281,7 @@ object TableStats {
     def addedCounts(a: String): Map[String, Long] =
       if (!added.columns.contains(a)) Map.empty
       else {
-        val dt = added.schema(a).dataType
-        val grouped = added.where(col(a).isNotNull)
-          .groupBy(render(dt, col(a)).as("v")).agg(count(lit(1)).as("n"))
+        val grouped = valueCounts(added, a)
         val top = grouped.orderBy(desc("n"), asc("v")).limit(topK).collect()
         val stored = st.attributes(a).topK.map(_._1)
         val refreshed = if (stored.isEmpty) Array.empty[org.apache.spark.sql.Row]
@@ -289,11 +289,7 @@ object TableStats {
         (top ++ refreshed).map(r => r.getString(0) -> r.getLong(1)).toMap
       }
 
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val node = mapper.createObjectNode()
-    node.put("snapshot", toSnapshot)
     val total = math.max(0L, st.count - remN + addN)
-    node.put("count", total)
     // staleness guard (VERDICT r4 #6): counts move exactly, but bounds
     // only expand and HLLs only union — a delete-heavy chain makes them
     // increasingly loose upper bounds. Track the cumulative deletions
@@ -301,75 +297,52 @@ object TableStats {
     // the live count, flag the sidecar so planners (and operators
     // seeding from cached stats) know a re-collect is due.
     val deleted = st.deleted + remN
-    node.put("deleted", deleted)
-    val isStale = deleted >= staleFraction * math.max(1L, total)
-    node.put("stale", isStale)
     val bounds = (st.bounds, addEnv) match {
       case (Some(b), Some(e)) => Some((math.min(b._1, e._1), math.min(b._2, e._2),
         math.max(b._3, e._3), math.max(b._4, e._4)))
       case (b, e) => b.orElse(e)
     }
-    if (total > 0) bounds.foreach { b =>
-      val arr = node.putArray("bounds")
-      arr.add(b._1); arr.add(b._2); arr.add(b._3); arr.add(b._4)
-    }
-    val attrsNode = node.putObject("attributes")
-    tracked.foreach { a =>
+    val attrs = tracked.map { a =>
       val old = st.attributes(a)
-      val (addMin, addMax, addCnt, addCard, addHll) =
-        addAttrs.getOrElse(a, (None, None, 0L, 0L, None))
-      val remCnt = remAttrs.get(a).map(_._3).getOrElse(0L)
-      val n = attrsNode.putObject(a)
-      val cnt = math.max(0L, old.count - remCnt + addCnt)
-      n.put("count", cnt)
+      val AttrAgg(addMin, addMax, addCnt, addCard, addHll) =
+        addAttrs.getOrElse(a, AttrAgg(None, None, 0L, 0L, None))
+      val remCnt = remAttrs.get(a).map(_.count).getOrElse(0L)
       // sketch union when the sidecar carries one (collect() has since
       // round 4); pre-sketch sidecars fall back to the documented
       // max(old, added) lower bound
-      old.hll match {
+      val (card, hll) = old.hll match {
         case Some(oldB64) =>
-          val (est, merged) = mergeHll(oldB64, addHll)
-          n.put("cardinality", est)
-          n.put("hll", merged)
-        case None =>
-          n.put("cardinality", math.max(old.cardinality, addCard))
+          val (est, merged) = mergeHll(oldB64, addHll.filter(_ => addCnt > 0))
+          (est, Some(merged))
+        case None => (math.max(old.cardinality, addCard), None)
       }
-      n.put("type", old.dataType)
-      val oldMin = Option(old.min).filter(_ => old.count > 0)
-      val oldMax = Option(old.max).filter(_ => old.count > 0)
-      val mn = (oldMin, addMin) match {
-        case (Some(x), Some(y)) => Some(if (lessRendered(old.dataType, y, x)) y else x)
-        case (x, y) => x.orElse(y)
-      }
-      val mx = (oldMax, addMax) match {
-        case (Some(x), Some(y)) => Some(if (lessRendered(old.dataType, x, y)) y else x)
-        case (x, y) => x.orElse(y)
-      }
-      if (cnt > 0) { mn.foreach(n.put("min", _)); mx.foreach(n.put("max", _)) }
+      // the stored bound, or the added one where it lies outside
+      def expand(stored: String, add: Option[String], outside: (String, String) => Boolean) =
+        (Option(stored).filter(_ => old.count > 0), add) match {
+          case (Some(x), Some(y)) => Some(if (outside(x, y)) y else x)
+          case (x, y) => x.orElse(y)
+        }
+      val mn = expand(old.min, addMin, (x, y) => lessRendered(old.dataType, y, x))
+      val mx = expand(old.max, addMax, (x, y) => lessRendered(old.dataType, x, y))
       val ac = addedCounts(a)
       val oldTk = old.topK.toMap
       val merged = (oldTk.keySet ++ ac.keySet).toSeq
         .map(v => v -> (oldTk.getOrElse(v, 0L) + ac.getOrElse(v, 0L)))
-      val tk = n.putArray("topk")
-      merged.sortBy { case (v, c) => (-c, v) }.take(topK).foreach { case (v, c) =>
-        val e = tk.addArray(); e.add(v); e.add(c)
-      }
-    }
-    val f = fs(spark, root)
-    f.mkdirs(new Path(s"$root/_stats"))
-    val out = f.create(new Path(statsPath(root, toSnapshot)), true)
-    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8")) finally out.close()
+      a -> AttributeStat(mn.orNull, mx.orNull, math.max(0L, old.count - remCnt + addCnt), card,
+        old.dataType, merged.sortBy { case (v, c) => (-c, v) }.take(topK), hll)
+    }.toMap
+    writeStats(spark, root, Stats(toSnapshot, total, bounds.filter(_ => total > 0), attrs,
+      deleted, stale = deleted >= staleFraction * math.max(1L, total)), tracked,
+      withDeletions = true)
   }
 
   /** Parse the cached stats; None when never collected. */
   def cached(spark: SparkSession, root: String, snapshotId: String): Option[Stats] = {
-    val f = fs(spark, root)
+    val f = TableEngine.fs(spark, root)
     val p = new Path(statsPath(root, snapshotId))
     if (!f.exists(p)) None
     else {
-      val in = f.open(p)
-      val text = try new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(Snapshots.readString(f, p))
       val bounds = Option(n.get("bounds")).filter(_.size == 4).map(b =>
         (b.get(0).asDouble, b.get(1).asDouble, b.get(2).asDouble, b.get(3).asDouble))
       val attrs = {
@@ -397,20 +370,6 @@ object TableStats {
     }
   }
 
-  /** Whether the snapshot's manifest is an extent (GeomTable) one —
-    * point manifests always carry a top-level prefix_res (review r5c
-    * #2: the exact/estimate fallbacks must route by table kind now
-    * that extent roots are stats citizens). */
-  private def isExtent(spark: SparkSession, root: String, snapshotId: String): Boolean = {
-    val f = fs(spark, root)
-    val p = new Path(s"$root/_manifests/$snapshotId.json")
-    require(f.exists(p), s"no manifest for snapshot $snapshotId under $root")
-    val in = f.open(p)
-    val txt = try new String(
-      org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8") finally in.close()
-    !new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt).has("prefix_res")
-  }
-
   /** Feature count: cached (None when stats were never collected) or
     * exact via a scan, optionally under a CQL filter — the reference's
     * stats.getCount(sft, filter, exact). Exact scans route by the
@@ -420,15 +379,13 @@ object TableStats {
                lonCol: String = "lon", latCol: String = "lat",
                idColumn: String = "id"): Option[Long] = {
     if (exact) {
-      val df =
-        if (isExtent(spark, root, snapshotId)) cql match {
-          case Some(q) => GeomTable.queryCql(spark, root, snapshotId, q,
-            GeomTable.manifest(spark, root, snapshotId).geom, idColumn)
-          case None => GeomTable.read(spark, root, snapshotId)
-        } else cql match {
-          case Some(q) => SpatialTable.queryCql(spark, root, snapshotId, q, lonCol, latCol, idColumn)
-          case None => SpatialTable.read(spark, root, snapshotId)
-        }
+      val df = (TableEngine.manifest(spark, root, snapshotId).layout, cql) match {
+        case (e: GeomTable.Manifest, Some(q)) =>
+          GeomTable.queryCql(spark, root, snapshotId, q, e.geom, idColumn)
+        case (_: GeomTable.Manifest, None) => GeomTable.read(spark, root, snapshotId)
+        case (_, Some(q)) => SpatialTable.queryCql(spark, root, snapshotId, q, lonCol, latCol, idColumn)
+        case (_, None) => SpatialTable.read(spark, root, snapshotId)
+      }
       Some(df.count())
     } else cached(spark, root, snapshotId).map(_.count)
   }
@@ -452,36 +409,39 @@ object TableStats {
       .map(_.topK).getOrElse(Seq.empty)
 
   /**
-   * Estimated count for a bbox query, from the per-partition lineage
-   * metrics: the total rows of the cell_prefix directories the bbox
-   * cover touches. A superset bound at prefix granularity (estimate >=
-   * exact; 0 exactly when no data directory intersects the box), zero
-   * data I/O — the planner-side analog of the reference's stored
-   * spatial histogram estimate (GeoMesaStats.getCount without exact).
+   * Estimated count for a bbox query, from the manifest's per-key row
+   * counts: the total rows of the partition keys the bbox covers —
+   * cell_prefix directories on point tables, coarse XZ chunks on extent
+   * tables. A superset bound at key granularity (estimate >= exact; 0
+   * exactly when no data directory intersects the box), zero data I/O —
+   * the planner-side analog of the reference's stored spatial histogram
+   * estimate (GeoMesaStats.getCount without exact). Legacy temporal
+   * point manifests, which list no keys, sum their `_metrics` lineage.
    */
   def estimateCount(spark: SparkSession, root: String, snapshotId: String,
                     bbox: (Double, Double, Double, Double),
                     maxCells: Int = 4096): Long = {
-    if (isExtent(spark, root, snapshotId)) {
-      // extent roots carry per-chunk row counts in the MANIFEST (no
-      // _metrics table): the estimate is the total rows of the chunks
-      // the bbox's coarse XZ ranges cover — a guaranteed superset at
-      // chunk granularity, zero data I/O, exactly like the point path
-      val info = GeomTable.ginfo(spark, root, snapshotId)
-      require(info.chunked,
-        s"legacy extent snapshot $snapshotId has no partition stats — re-commit via rewrite")
-      val ranges = graft.cells.XZ2(info.m.chunkRes)
-        .ranges(bbox._1, bbox._2, bbox._3, bbox._4, 64)
-      return info.partitions.collect {
-        case (k, rows) if ranges.exists(r => k.chunk >= r.lower && k.chunk <= r.upper) => rows
-      }.sum
+    val m = TableEngine.manifest(spark, root, snapshotId)
+    def rowsOf(hit: Long => Boolean): Long =
+      m.partitions.collect { case (k, rows) if hit(k.value) => rows }.sum
+    m.layout match {
+      case e: GeomTable.Manifest =>
+        require(m.keyed,
+          s"legacy extent snapshot $snapshotId has no partition stats — re-commit via rewrite")
+        val ranges = graft.cells.XZ2(e.chunkRes).ranges(bbox._1, bbox._2, bbox._3, bbox._4, 64)
+        rowsOf(c => ranges.exists(r => c >= r.lower && c <= r.upper))
+      case p: SpatialTable.PointLayout =>
+        // a cover that would overflow maxCells coarsens its resolution,
+        // and coarser cells never equal a stored prefix: count everything
+        val cover =
+          if (Cells.coverCountBBox(bbox._1, bbox._2, bbox._3, bbox._4, p.prefixRes) > maxCells) None
+          else Some(Cells.coverBBox(bbox._1, bbox._2, bbox._3, bbox._4, p.prefixRes, maxCells).toSet)
+        if (m.keyed) rowsOf(c => cover.forall(_.contains(c)))
+        else {
+          val metrics = spark.read.parquet(s"$root/_metrics/snapshot=$snapshotId")
+          cover.fold(metrics)(c => metrics.where(col("cell_prefix").isin(c.toSeq: _*)))
+            .agg(coalesce(sum("rows"), lit(0L))).collect().head.getLong(0)
+        }
     }
-    val snap = SpatialTable.manifest(spark, root, snapshotId)
-    val m = spark.read.parquet(s"$root/_metrics/snapshot=$snapshotId")
-    val pruned =
-      if (Cells.coverCountBBox(bbox._1, bbox._2, bbox._3, bbox._4, snap.prefixRes) > maxCells) m
-      else m.where(col("cell_prefix").isin(
-        Cells.coverBBox(bbox._1, bbox._2, bbox._3, bbox._4, snap.prefixRes, maxCells): _*))
-    pruned.agg(coalesce(sum("rows"), lit(0L))).collect().head.getLong(0)
   }
 }

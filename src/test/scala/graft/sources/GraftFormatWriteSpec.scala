@@ -92,7 +92,7 @@ class GraftFormatWriteSpec extends AnyFunSuite with SparkTest {
       .save(root)
     val info = SpatialTable.manifestInfo(spark, root, "s1")
     assert(info.period.contains("week"))
-    assert(info.tpartitions.nonEmpty, "temporal manifest records its partitions")
+    assert(info.partitions.nonEmpty, "temporal manifest records its partitions")
     assert(SpatialTable.indexedColumns(spark, root, "s1").keySet == Set("kind", "id"))
     assert(SpatialTable.readByAttribute(spark, root, "s1", "kind", "even").count() == 30)
   }

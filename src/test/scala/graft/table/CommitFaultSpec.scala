@@ -14,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
  * each mutation (deleteWhere, updateWhere, upsert) on each table kind,
  * with one attribute index and collected stats, every metadata file the
  * commit writes — the manifest json, the commit and index markers, the
- * index sources sidecar, the `_metrics` files, the `_stats` sidecar —
+ * index sources sidecar, the `_metrics` commit, the `_stats` sidecar —
  * and the first data file fails in turn, as a crash in the middle of
  * writing it would. After each failure every listed snapshot reads as
  * before, a retry of the same call commits the rows a fault-free run
@@ -35,8 +35,16 @@ class CommitFaultSpec extends AnyFunSuite with SparkTest {
                                 expire: (String, String) => Unit,
                                 ops: Seq[(String, (String, String) => Unit)])
 
-  private def rows(df: DataFrame): Seq[String] =
-    df.select("id", "name", "age").collect().map(_.mkString("|")).toSeq.sorted
+  private def rows(df: DataFrame): Seq[String] = tagged(Seq("" -> df))("")
+
+  /** The rows of several reads, collected by ONE job: tag -> sorted rows. */
+  private def tagged(reads: Seq[(String, DataFrame)]): Map[String, Seq[String]] = {
+    val all = reads.map { case (t, df) => df.select(lit(t).as("tag"), $"id", $"name", $"age") }
+      .reduce(_ unionByName _).collect()
+    reads.map { case (t, _) =>
+      t -> all.filter(_.getString(0) == t).map(_.toSeq.tail.mkString("|")).toSeq.sorted
+    }.toMap
+  }
 
   private val pointRows: DataFrame = {
     val a = (0 until 40).map(i => (s"a$i", "alpha", i.toLong, -120.0 + i * 0.01, 35.0))
@@ -96,15 +104,16 @@ class CommitFaultSpec extends AnyFunSuite with SparkTest {
 
   /** The file a create writes, as a fault kind of the commit into `to`:
     * its metadata files by name (the target id masked, so the same kind
-    * selects the same file of another target), and "the first data or
-    * `_metrics` file". None for every other create. */
+    * selects the same file of another target), the `_metrics` write's
+    * job-commit marker, and "the first data file" (an executor-side
+    * create). None for every other create. */
   private def kindOf(root: String, p: Path, to: String): Option[String] = {
     val rel = p.toUri.getPath.stripPrefix(new Path(root).toUri.getPath).stripPrefix("/")
     val masked = rel.replace(s"snapshot=$to/", "snapshot=@/")
     val (dir, name) = rel.splitAt(rel.indexOf('/') + 1)
     if (masked.startsWith("data/snapshot=@/")) Some("first data file")
-    else if (masked.startsWith("_metrics/snapshot=@/"))
-      Some(if (name.endsWith("_SUCCESS")) "_metrics _SUCCESS" else "first _metrics file")
+    else if (masked.startsWith("_metrics/snapshot=@/") && name.endsWith("_SUCCESS"))
+      Some("_metrics _SUCCESS")
     else if ((dir == "_manifests/" || dir == "_stats/") &&
       (name.startsWith(s"$to.") || name.startsWith(s".$to.")))
       Some(dir + name.replaceFirst(java.util.regex.Pattern.quote(to), "@"))
@@ -121,7 +130,7 @@ class CommitFaultSpec extends AnyFunSuite with SparkTest {
     try body finally Configurator.setLevel("org.apache.spark", before)
   }
 
-  private def sweep(kind: Kind): Unit = kind.ops.foreach { case (opName, op) =>
+  private def sweep(kind: Kind): Unit = withOnePartition(kind.ops.foreach { case (opName, op) =>
     val root = newRoot()
     kind.build(root)
     val base = rows(kind.read(root, "s1"))
@@ -142,18 +151,61 @@ class CommitFaultSpec extends AnyFunSuite with SparkTest {
           op(root, to)))
         assert(CountingFileSystem.faultedPath.nonEmpty, "the fault fired")
         assert(err.nonEmpty, "the call failed")
-        Snapshots.committed(spark, root).foreach { id =>
-          assert(rows(kind.read(root, id)) == (if (id == "s1") base else want),
-            s"listed snapshot $id")
-        }
+        val listed = Snapshots.committed(spark, root)
+        assert(tagged(listed.map(id => id -> kind.read(root, id))) ==
+          listed.map(id => id -> (if (id == "s1") base else want)).toMap, "listed snapshots")
         // the retry, then GC down to it: what it reads must all survive
         op(root, to)
         kind.expire(root, to)
-        assert(rows(kind.read(root, to)) == want)
-        assert(rows(kind.byName(root, to)) == wantIdx)
-        assert(rows(kind.read(root, "s1")) == base, "s1 is retained: the retry inherits from it")
+        assert(tagged(Seq("to" -> kind.read(root, to), "index" -> kind.byName(root, to),
+          "s1" -> kind.read(root, "s1"))) == Map("to" -> want, "index" -> wantIdx, "s1" -> base),
+          "the retried snapshot, its index, and s1, which it inherits from")
       }
     }
+  })
+
+  /** The tables are tiny and the sweep runs many commits: one shuffle
+    * partition and no adaptive re-planning keep each to a few small
+    * jobs. Neither changes which metadata files a commit writes, or
+    * their order. */
+  private def withOnePartition[T](body: => T): T = {
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    val before = keys.map(k => k -> spark.conf.get(k))
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body finally before.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("a failure while upgrading a committed legacy manifest leaves the snapshot " +
+    "readable, and a retry of the upgrade succeeds") {
+    val root = newRoot()
+    val rows = (0 until 60).map { i =>
+      (s"id$i", 10.0 + (i % 10) * 0.01, 20.0,
+        java.sql.Timestamp.valueOf(f"2024-${1 + i % 3}%02d-10 12:00:00"))
+    }
+    SpatialTable.writeTemporal(spark, rows.toDF("id", "lon", "lat", "dtg"), root, "s1",
+      "id", "lon", "lat", "dtg", period = "month", res = 9, prefixRes = 3, salts = 1,
+      partitions = 2)
+    // the legacy (pre-round-4) manifest shape: no partitions array
+    val manifest = new Path(s"$root/_manifests/s1.json")
+    val f = manifest.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val node = mapper.readTree(Snapshots.readString(f, manifest))
+      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    node.remove("partitions")
+    val out = f.create(manifest, true)
+    try out.write(mapper.writeValueAsString(node).getBytes("UTF-8")) finally out.close()
+    def ids = SpatialTable.read(spark, root, "s1").select("id").as[String].collect().sorted.toSeq
+    val before = ids
+
+    val err = CountingFileSystem.failing(spark, 1)(_.getName.contains("s1.json"))(
+      SpatialTable.upgradeManifest(spark, root, "s1"))
+    assert(err.nonEmpty && CountingFileSystem.faultedPath.nonEmpty, "the upgrade failed")
+    assert(SpatialTable.isCommitted(spark, root, "s1"))
+    assert(ids == before, "the committed snapshot still reads")
+    assert(SpatialTable.upgradeManifest(spark, root, "s1"), "the retry upgrades")
+    assert(SpatialTable.manifestInfo(spark, root, "s1").partitions.size == 3)
+    assert(ids == before)
   }
 
   test("a point-table commit that fails at any metadata write or its first data " +

@@ -165,11 +165,11 @@ class GeomMutationScopedSpec extends AnyFunSuite with SparkTest {
     val out = hfs.create(mPath, true)
     out.write("""{"res":12,"period":"week","geom":"geom","dtg":null}""".getBytes("UTF-8"))
     out.close()
-    assert(!GeomTable.ginfo(spark, root, "s1").chunked)
+    assert(!GeomTable.ginfo(spark, root, "s1").keyed)
     assert(GeomTable.read(spark, root, "s1").count() == 40) // legacy read path
     GeomTable.deleteWhere(spark, root, "s1", "s2", "name = 'west'")
     assert(GeomTable.read(spark, root, "s2").count() == 20)
-    assert(GeomTable.ginfo(spark, root, "s2").chunked, "fallback re-commits chunked")
+    assert(GeomTable.ginfo(spark, root, "s2").keyed, "fallback re-commits chunked")
     // and the chunked descendant now mutates scoped
     GeomTable.updateWhere(spark, root, "s2", "s3", "age < 5", Map("age" -> lit(-1L)))
     assert(GeomTable.read(spark, root, "s3").where($"age" === -1L).count() == 5)
@@ -313,11 +313,32 @@ class GeomMutationScopedSpec extends AnyFunSuite with SparkTest {
     val info = GeomTable.ginfo(spark, root, "s4")
     assert(info.scoped && info.sources.nonEmpty)
     info.sources.foreach { case (k, snap) =>
-      assert(new java.io.File(s"$root/data/snapshot=$snap/${k.relpath}").exists(),
-        s"dangling source ${k.relpath} -> $snap")
+      assert(new java.io.File(s"$root/data/snapshot=$snap/${info.relpath(k)}").exists(),
+        s"dangling source ${info.relpath(k)} -> $snap")
     }
     // time travel intact
     assert(GeomTable.read(spark, root, "s1").count() == 40)
     assert(GeomTable.read(spark, root, "s3").count() == 38)
+  }
+
+  test("an extent upsert finds old rows through an id-index layout when the table has " +
+    "one, and commits the rows the scan path commits") {
+    val updates = Seq(("w3", "west", 300L, box(-120.0, 35.0, 0.3, 0.2)),
+      ("e4", "moved", 400L, box(-119.0, 36.0, 0.3, 0.2)),
+      ("n1", "new", 1L, box(10.0, 10.0, 0.3, 0.2))).toDF("id", "name", "age", "geom")
+    def upserted(withIdIndex: Boolean): Seq[String] = {
+      val root = newRoot()
+      GeomTable.write(spark, twoClusters, root, "s1", partitions = 4)
+      if (withIdIndex) GeomTable.writeAttributeIndex(spark, root, "s1", "id", buckets = 4)
+      GeomTable.upsert(spark, root, "s1", "s2", updates)
+      if (withIdIndex)
+        assert(GeomTable.readByAttribute(spark, root, "s2", "id", "e4")
+          .select("name").as[String].collect().toSeq == Seq("moved"), "the id layout follows")
+      GeomTable.read(spark, root, "s2").select("id", "name", "age", "xz_chunk")
+        .collect().map(_.mkString("|")).toSeq.sorted
+    }
+    val viaIndex = upserted(withIdIndex = true)
+    assert(viaIndex.size == 41)
+    assert(viaIndex == upserted(withIdIndex = false))
   }
 }

@@ -138,13 +138,13 @@ class LifecycleHardeningSpec extends AnyFunSuite with SparkTest {
       .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
     node.remove("partitions")
     writeViaHadoop(s"$root/_manifests/s1.json", mapper.writeValueAsString(node))
-    assert(SpatialTable.manifestInfo(spark, root, "s1").tpartitions.isEmpty)
+    assert(SpatialTable.manifestInfo(spark, root, "s1").partitions.isEmpty)
 
     assert(SpatialTable.upgradeManifest(spark, root, "s1"))
     assert(!SpatialTable.upgradeManifest(spark, root, "s1"), "second upgrade is a no-op")
     val upgraded = SpatialTable.manifestInfo(spark, root, "s1")
-    assert(upgraded.tpartitions.size == 3, s"three month bins: ${upgraded.tpartitions}")
-    assert(upgraded.tpartitions.values.sum == 60)
+    assert(upgraded.partitions.size == 3, s"three month bins: ${upgraded.partitions}")
+    assert(upgraded.partitions.values.sum == 60)
 
     // a scoped delete now inherits January/March from s1 by path
     SpatialTable.deleteWhere(spark, root, "s1", "s2",

@@ -191,7 +191,7 @@ class MutationScopedSpec extends AnyFunSuite with SparkTest {
     assert(info.sources.nonEmpty)
     // every referenced directory physically exists (flattened values)
     info.sources.foreach { case (p, snap) =>
-      assert(new java.io.File(s"$root/data/snapshot=$snap/cell_prefix=$p").exists(),
+      assert(new java.io.File(s"$root/data/snapshot=$snap/cell_prefix=${p.value}").exists(),
         s"dangling source $p -> $snap")
     }
     // full time travel: every intermediate snapshot still answers

@@ -52,16 +52,16 @@ class SnapshotIndexSpec extends AnyFunSuite with SparkTest {
     val info = SpatialTable.manifestInfo(spark, root, id)
     if (!info.scoped) spark.read.parquet(s"$root/data/snapshot=$id")
     else basePathRead(info.schema, s"$root/data",
-      info.physicalKeys.toSeq.sortBy(_._1.relpath)
-        .map { case (k, src) => s"$root/data/snapshot=$src/${k.relpath}" },
+      info.physicalKeys.toSeq.sortBy(e => info.relpath(e._1))
+        .map { case (k, src) => s"$root/data/snapshot=$src/${info.relpath(k)}" },
       info.readOrder)
   }
 
   private def oldGeomRead(root: String, id: String): DataFrame = {
     val info = GeomTable.ginfo(spark, root, id)
-    basePathRead(info.schema.get, s"$root/data",
-      info.physicalKeys.toSeq.sortBy(_._1.relpath)
-        .map { case (k, src) => s"$root/data/snapshot=$src/${k.relpath}" },
+    basePathRead(info.schema, s"$root/data",
+      info.physicalKeys.toSeq.sortBy(e => info.relpath(e._1))
+        .map { case (k, src) => s"$root/data/snapshot=$src/${info.relpath(k)}" },
       info.readOrder)
   }
 
@@ -208,7 +208,7 @@ class SnapshotIndexSpec extends AnyFunSuite with SparkTest {
           val info = GeomTable.ginfo(spark, root, id)
           assertSameRead(
             GeomTable.indexRead(spark, root, info, "name"),
-            oldIndexRead(root, id, "name", info.schema.get, info.readOrder))
+            oldIndexRead(root, id, "name", info.schema, info.readOrder))
         }
       }
       assert(sidecar(root, "s3", "name").nonEmpty, "the chain delta-rebuilds the index")
