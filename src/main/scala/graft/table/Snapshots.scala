@@ -1,8 +1,12 @@
 package graft.table
 
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /**
  * The snapshot-store mechanics under [[TableEngine]]: the
@@ -111,12 +115,42 @@ private[graft] object Snapshots {
   //   <root>/index_<attr>/snapshot=<id>/attr_bucket=<b>/part-*.parquet
   //   <root>/_manifests/<id>.attr_<attr>.committed  marker: the bucket
   //       count, then (point tables) the tier column
-  //   <root>/_manifests/<id>.attr_<attr>.sources    delta-rebuilt
-  //       layouts only: bucket -> the snapshot physically holding it
+  //   <root>/_manifests/<id>.attr_<attr>.sources    scoped layouts only:
+  //       where each bucket's rows live ([[IndexLayout]])
+  //
+  // A self-contained layout (a first write or a whole-table rewrite) holds
+  // every bucket in its own directory and has no sidecar. A scoped commit
+  // writes only the buckets its changed rows hash into and names every
+  // bucket's holders in the sidecar. Each bucket is a BASE — index rows
+  // sorted by (attr, tier?, sortCol), in the snapshot that last wrote it
+  // whole — plus at most one DELTA: a single file, in the directory of
+  // the snapshot that wrote it, holding the bucket's changes since its
+  // base, cumulatively. The delta's rows are index rows (flag false, sorted
+  // like the base) that replace or add to the base; its TOMBSTONES (flag
+  // true, only the id column set) are the ids removed from the base. A
+  // read is the base minus its tombstones on (attr_bucket, id), plus the
+  // delta rows. A commit rewrites a touched bucket's delta, or FOLDS the
+  // bucket (rewrites it whole as a new base, no delta) once the delta
+  // outgrows [[TableEngine.FoldFraction]] of an average bucket.
   //
   // The sidecar is NOT ".json": committed() recognizes a snapshot by the
   // (<id>.committed, <id>.json) pair, and a .json sidecar would make the
   // layout masquerade as a snapshot.
+
+  /** The flag column of a delta file: true on tombstones. */
+  val Tombstone = "__tombstone"
+
+  /** Where an index bucket's rows live: the snapshot holding its base
+    * files and, if the bucket changed since, the one holding its delta
+    * file. `size` bounds the delta's rows plus tombstones from above (the
+    * sum of the changed rows each commit added to it). */
+  final case class IndexBucket(base: String, delta: Option[String] = None, size: Long = 0L) {
+    def holders: Seq[String] = base +: delta.toSeq
+  }
+
+  /** An index layout's buckets, and the id column its tombstones key
+    * (None while no bucket has a delta). */
+  final case class IndexLayout(idCol: Option[String], buckets: Map[Int, IndexBucket])
 
   def indexMarkerPath(root: String, id: String, attr: String): String =
     s"$root/_manifests/$id.attr_$attr.committed"
@@ -145,20 +179,40 @@ private[graft] object Snapshots {
       .toMap
   }
 
-  /** bucket -> physical snapshot for a delta-rebuilt layout (its sources
-    * sidecar); None for a self-contained layout. */
+  private val mapper = new ObjectMapper()
+
+  /** A scoped layout's sidecar; None for a self-contained layout. A
+    * bucket entry is its base holder's id (all sidecars written before
+    * deltas existed are of this form) or an object with the delta. */
   private def indexSources(spark: SparkSession, root: String, id: String,
-                           attr: String): Option[Map[Int, String]] = {
+                           attr: String): Option[IndexLayout] = {
     val f = TableEngine.fs(spark, root)
     val jp = new Path(indexSourcesPath(root, id, attr))
     if (!f.exists(jp)) None
     else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(readString(f, jp))
-      val it = n.get("sources").fields()
-      val b = Map.newBuilder[Int, String]
-      while (it.hasNext) { val e = it.next(); b += e.getKey.toInt -> e.getValue.asText }
-      Some(b.result())
+      val n = mapper.readTree(readString(f, jp))
+      Some(IndexLayout(Option(n.get("id")).map(_.asText),
+        n.get("sources").fields().asScala.map { e =>
+          val v = e.getValue
+          e.getKey.toInt -> (if (v.isTextual) IndexBucket(v.asText)
+            else IndexBucket(v.get("base").asText, Some(v.get("delta").asText), v.get("size").asLong))
+        }.toMap))
     }
+  }
+
+  /** Writes a scoped layout's sidecar. */
+  def writeIndexSources(spark: SparkSession, root: String, id: String, attr: String,
+                        layout: IndexLayout): Unit = {
+    val node = mapper.createObjectNode()
+    layout.idCol.foreach(node.put("id", _))
+    val srcs = node.putObject("sources")
+    layout.buckets.toSeq.sortBy(_._1).foreach {
+      case (b, IndexBucket(base, None, _)) => srcs.put(b.toString, base)
+      case (b, IndexBucket(base, Some(delta), size)) =>
+        srcs.putObject(b.toString).put("base", base).put("delta", delta).put("size", size)
+    }
+    writeString(TableEngine.fs(spark, root), indexSourcesPath(root, id, attr),
+      mapper.writeValueAsString(node))
   }
 
   /** The bucket directories a layout's own snapshot directory holds. */
@@ -167,20 +221,47 @@ private[graft] object Snapshots {
     names(spark, s"$root/index_$attr/snapshot=$id")
       .collect { case s if s.startsWith("attr_bucket=") => s.stripPrefix("attr_bucket=").toInt }
 
-  /** bucket -> physical snapshot: the sources sidecar when the layout was
-    * delta-rebuilt, else its own directory listing (self-contained). */
-  def indexPhysical(spark: SparkSession, root: String, id: String,
-                    attr: String): Map[Int, String] =
+  /** Where a layout's buckets live: its sidecar when a scoped commit
+    * wrote it, else its own directory listing (self-contained). */
+  def indexLayout(spark: SparkSession, root: String, id: String, attr: String): IndexLayout =
     indexSources(spark, root, id, attr)
-      .getOrElse(listedBuckets(spark, root, id, attr).map(_ -> id).toMap)
+      .getOrElse(IndexLayout(None, listedBuckets(spark, root, id, attr).map(_ -> IndexBucket(id)).toMap))
 
-  /** Index layout scan, planned like a snapshot read: a delta-rebuilt
-    * layout's leaves are the buckets its sources sidecar names, a
-    * self-contained layout's the bucket directories it holds. `columns`
-    * is the snapshot's read schema; attr_bucket follows it. */
+  /** Index layout scan, planned like a snapshot read ([[layoutRead]]). */
   def indexRead(spark: SparkSession, root: String, id: String, attr: String,
                 columns: StructType): DataFrame =
-    indexScan(spark, root, attr, columns, indexPhysical(spark, root, id, attr).toSeq)
+    layoutRead(spark, root, attr, columns, indexLayout(spark, root, id, attr))
+
+  /**
+   * The rows of a layout's buckets, in `columns` (the snapshot's read
+   * schema) plus `attr_bucket`. Buckets without a delta are one plain
+   * scan; those with one add their base minus its tombstones (Spark
+   * broadcasts the tombstones while they are small, which the fold keeps
+   * them) and their delta rows. Partition filters on `attr_bucket` prune
+   * every branch.
+   */
+  def layoutRead(spark: SparkSession, root: String, attr: String, columns: StructType,
+                 layout: IndexLayout): DataFrame = {
+    val (changed, plain) = layout.buckets.toSeq.partition(_._2.delta.isDefined)
+    val scan = indexScan(spark, root, attr, columns, plain.map(e => e._1 -> e._2.base))
+    if (changed.isEmpty) scan
+    else {
+      val idCol = layout.idCol.get
+      val (rows, tombs) = deltaOf(spark, root, attr, columns, changed)
+      val base = indexScan(spark, root, attr, columns, changed.map(e => e._1 -> e._2.base))
+      scan.unionByName(base.join(tombs.select("attr_bucket", idCol), Seq("attr_bucket", idCol),
+        "left_anti").select(scan.columns.toSeq.map(col): _*)).unionByName(rows)
+    }
+  }
+
+  /** The delta rows and the tombstones (rows with only `attr_bucket`
+    * and the id set) of the given buckets that have a delta. */
+  def deltaOf(spark: SparkSession, root: String, attr: String, columns: StructType,
+              buckets: Seq[(Int, IndexBucket)]): (DataFrame, DataFrame) = {
+    val delta = indexScan(spark, root, attr, columns.add(StructField(Tombstone, BooleanType)),
+      buckets.collect { case (b, IndexBucket(_, Some(d), _)) => b -> d })
+    (delta.where(!col(Tombstone)).drop(Tombstone), delta.where(col(Tombstone)))
+  }
 
   /** A scan over the given index buckets (bucket -> physical holder). */
   def indexScan(spark: SparkSession, root: String, attr: String, columns: StructType,

@@ -289,4 +289,23 @@ class MutationScopedSpec extends AnyFunSuite with SparkTest {
       Seq(("n1", "new", 1L, 0.0, 0.0)).toDF("id", "name", "age", "lon", "lat"))
     assert(SpatialTable.read(spark, root, "s3").count() == 1)
   }
+
+  test("the same commits into two roots write byte-identical _metrics files") {
+    def parquetBytes(root: String, snap: String): Seq[Seq[Byte]] =
+      new java.io.File(s"$root/_metrics/snapshot=$snap").listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq
+        .map(f => java.nio.file.Files.readAllBytes(f.toPath).toSeq)
+    val roots = Seq(freshRoot("graft_metrics_a"), freshRoot("graft_metrics_b"))
+    roots.foreach { root =>
+      SpatialTable.write(spark, twoClusters, root, "s1", "id", "lon", "lat",
+        res = 9, prefixRes = 4, salts = 4, partitions = 8)
+      SpatialTable.upsert(spark, root, "s1", "s2",
+        Seq(("w3", "west-upd", 99L, -120.0, 35.0), ("x1", "extra", 7L, 140.5, -20.0))
+          .toDF("id", "name", "age", "lon", "lat"))
+    }
+    Seq("s1", "s2").foreach { snap =>
+      val Seq(a, b) = roots.map(parquetBytes(_, snap))
+      assert(a.size == 1 && a == b, s"_metrics of $snap")
+    }
+  }
 }

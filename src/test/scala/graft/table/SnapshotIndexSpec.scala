@@ -65,16 +65,23 @@ class SnapshotIndexSpec extends AnyFunSuite with SparkTest {
       info.readOrder)
   }
 
-  /** bucket -> holder from a delta-rebuilt layout's sources sidecar. */
-  private def sidecar(root: String, id: String, attr: String): Option[Seq[(Int, String)]] = {
+  /** A scoped layout's sources sidecar: the tombstones' id column, and
+    * per bucket its base holder and delta holder, if any. */
+  private def sidecar(root: String, id: String,
+                      attr: String): Option[(Option[String], Seq[(Int, String, Option[String])])] = {
     val f = new java.io.File(s"$root/_manifests/$id.attr_$attr.sources")
     if (!f.exists()) None
     else {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f).get("sources")
-      val it = n.fields()
-      val b = Seq.newBuilder[(Int, String)]
-      while (it.hasNext) { val e = it.next(); b += e.getKey.toInt -> e.getValue.asText }
-      Some(b.result().sortBy(_._1))
+      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(f)
+      val it = n.get("sources").fields()
+      val b = Seq.newBuilder[(Int, String, Option[String])]
+      while (it.hasNext) {
+        val e = it.next()
+        val v = e.getValue
+        b += (if (v.isTextual) (e.getKey.toInt, v.asText, None)
+          else (e.getKey.toInt, v.get("base").asText, Some(v.get("delta").asText)))
+      }
+      Some((Option(n.get("id")).map(_.asText), b.result().sortBy(_._1)))
     }
   }
 
@@ -82,11 +89,23 @@ class SnapshotIndexSpec extends AnyFunSuite with SparkTest {
                            readOrder: Seq[String]): DataFrame = {
     val order = readOrder :+ "attr_bucket"
     val withBucket = StructType(schema.fields :+ StructField("attr_bucket", IntegerType))
+    def dirs(bs: Seq[(Int, String)]) = bs.map { case (b, src) => s"$root/index_$attr/snapshot=$src/attr_bucket=$b" }
     sidecar(root, id, attr) match {
       case None => spark.read.schema(withBucket).parquet(s"$root/index_$attr/snapshot=$id")
         .select(order.map(col): _*)
-      case Some(phys) => basePathRead(withBucket, s"$root/index_$attr",
-        phys.map { case (b, src) => s"$root/index_$attr/snapshot=$src/attr_bucket=$b" }, order)
+      case Some((idCol, phys)) =>
+        val (changed, plain) = phys.partition(_._3.isDefined)
+        val bases = basePathRead(withBucket, s"$root/index_$attr", dirs(plain.map(e => e._1 -> e._2)), order)
+        if (changed.isEmpty) bases
+        else {
+          // base minus tombstones, plus the delta rows
+          val delta = basePathRead(withBucket.add("__tombstone", "boolean"), s"$root/index_$attr",
+            dirs(changed.map(e => e._1 -> e._3.get)), order :+ "__tombstone")
+          val tombs = delta.where(col("__tombstone")).select("attr_bucket", idCol.get)
+          bases.unionByName(basePathRead(withBucket, s"$root/index_$attr", dirs(changed.map(e => e._1 -> e._2)), order)
+            .join(tombs, Seq("attr_bucket", idCol.get), "left_anti").select(order.map(col): _*))
+            .unionByName(delta.where(!col("__tombstone")).select(order.map(col): _*))
+        }
     }
   }
 
