@@ -1,10 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.collection.mutable
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.types.LongType
 import graft.cells.Cells
 import graft.functions.StFunctions
+import graft.geom.GeomOps
 
 /**
  * Distributed k-nearest-neighbor join: for each query point, the k
@@ -15,31 +20,46 @@ import graft.functions.StFunctions
  * (/root/reference/geomesa-process/.../knn/GeoHashSpiral.scala:96-151,
  * KNNQuery.scala:57-81): seed at the query's cell, expand rings of
  * neighbor cells, shrink the radius to the current kth distance,
- * terminate when no unvisited cell can be closer. Re-expressed for BSP
- * execution with a bounded number of whole-fleet passes:
+ * terminate when no unvisited cell can be closer. Like the reference,
+ * the search state of every query (its cell, ring, observed kth
+ * distance, capped/done) lives on the driver, in plain arrays; the data
+ * points are never collected, so the operator scales with executors.
  *
  *   seed:    one density estimate (the point count; table metadata in
  *            [[forTable]]) picks the initial disk radius so the
  *            expected candidate count is ~4k — most queries resolve in
- *            the FIRST candidate pass instead of log2(maxRings) doubling
- *            rounds, each of which is a pass over the point table (over
- *            a table, only the stored prefixes its disks reach);
- *   growth:  per-query state — only queries still short of k rejoin the
- *            next round with a doubled ring; satisfied queries carry
- *            their observed kth distance out of the loop;
+ *            the FIRST growth round instead of log2(maxRings) doubling
+ *            rounds;
+ *   growth:  each round is ONE Spark action: a scan of the points
+ *            (over a table, only the stored prefixes the active disks
+ *            reach) whose tasks look each point's cell up in the active
+ *            disks, which travel in the task closure, and keep the k
+ *            smallest distances per query; the driver merges them into
+ *            each query's candidate count and kth distance. Queries
+ *            short of k grow to a doubled ring; satisfied ones keep
+ *            their kth distance;
  *   proof:   any point outside disk radius r'(q) = ceil(d_k /
  *            metricCellWidth(lat_q)) + 1 is provably farther than the
  *            observed d_k (the k-completeness argument, done per query
  *            with the latitude-dependent east-west cell width);
- *   final:   ONE exact pass over the per-query proven disks, then a
- *            top-k window.
+ *   final:   the returned DataFrame is LAZY: a scan of the points joined
+ *            to a broadcast local relation of the proven disks (every
+ *            query column plus `__cell`), then a top-k window over
+ *            (dist, tieBreak...). It runs at the caller's action, as
+ *            three jobs: the broadcast, the shuffle and the result.
  *
  * A query with fewer than k reachable points keeps its maxRings disk
  * and returns what exists (matching the brute-force oracle on sparse
- * data) instead of disappearing from the output.
+ * data) instead of disappearing from the output. A query without a
+ * location (null lon or lat) has no cell, no disk and no output rows.
  *
- * Queries are broadcast (the reference collects them too); data points
- * are never collected, so the operator scales with executors.
+ * The queries are collected to the driver once (the reference collects
+ * them too), and a pass's disks are no larger than the broadcast of the
+ * final pass, so keeping the state on the driver adds no scaling limit.
+ * A round computes its distances with the same arithmetic as the final
+ * pass's `dist` (planar, or [[GeomOps.haversineMeters]], which the
+ * haversine column calls). [[lastSearch]] records what the most recent
+ * search did.
  */
 object KnnJoin {
 
@@ -47,14 +67,17 @@ object KnnJoin {
   private val MetersPerDegLon = 111320.0
 
   /** What one search did, as data: its growth rounds (candidate passes
-    * before the final exact pass) and, for each pass in order — the
-    * growth rounds, then the final pass — how many of the snapshot's
-    * `prefixesTotal` stored prefixes its point scan kept. `prefixesKept`
-    * is empty for a search whose points carry no stored prefixes (a raw
-    * DataFrame, or a table whose prefixes are finer than the kNN grid). */
-  final case class Search(growthRounds: Int, prefixesKept: Seq[Int], prefixesTotal: Int)
+    * before the final exact pass); for each pass in order — the growth
+    * rounds, then the final pass — the queries it searched for
+    * (`activeQueries`, growthRounds + 1 entries; the final pass searches
+    * every located query) and how many of the snapshot's `prefixesTotal`
+    * stored prefixes its point scan kept. `prefixesKept` is empty for a
+    * search whose points carry no stored prefixes (a raw DataFrame, or
+    * a table whose prefixes are finer than the kNN grid). */
+  final case class Search(growthRounds: Int, activeQueries: Seq[Int], prefixesKept: Seq[Int],
+                          prefixesTotal: Int)
 
-  @volatile private var last = Search(0, Nil, 0)
+  @volatile private var last = Search(0, Nil, Nil, 0)
 
   /** The most recent search on this driver. */
   def lastSearch: Search = last
@@ -69,7 +92,7 @@ object KnnJoin {
   /** Proof: observed kth distance -> proven disk radius. Any point
     * outside disk radius ceil(d_k / metricCellWidth(lat_q)) + 1 is
     * provably farther than the observed d_k. */
-  private val provenRing = udf { (dk: Double, qlat: Double, res: Int, maxRings: Int, planar: Boolean) =>
+  private def provenRing(dk: Double, qlat: Double, res: Int, maxRings: Int, planar: Boolean): Int = {
     val latW = Cells.latWidth(res)
     val lonW = Cells.lonWidth(res)
     // metric width of one cell step: north-south is latitude-constant;
@@ -88,7 +111,20 @@ object KnnJoin {
     math.min(maxRings, math.max(1, need))
   }
 
-  private val diskParents = udf((cell: Long, k: Int, r: Int) => Cells.diskParents(cell, k, r))
+  /** One round's work in one task: for each query, the k smallest
+    * distances (in no order) to the points of the task whose cell lies
+    * in the query's disk, `byCell` mapping each disk cell to its queries. */
+  private def nearest(k: Int, planar: Boolean, byCell: Map[Long, Seq[Int]], qlon: Array[Double],
+                      qlat: Array[Double])(points: Iterator[(Long, Double, Double)]): Iterator[(Int, Array[Double])] = {
+    val byQuery = mutable.HashMap.empty[Int, mutable.PriorityQueue[Double]]
+    for ((cell, lon, lat) <- points; q <- byCell.getOrElse(cell, Nil)) {
+      val (dx, dy) = (lon - qlon(q), lat - qlat(q))
+      val top = byQuery.getOrElseUpdate(q, mutable.PriorityQueue.empty(Ordering.Double.TotalOrdering))
+      top.enqueue(if (planar) math.sqrt(dx * dx + dy * dy) else GeomOps.haversineMeters(lon, lat, qlon(q), qlat(q)))
+      if (top.size > k) top.dequeue() // the largest of k + 1
+    }
+    byQuery.iterator.map { case (q, top) => (q, top.toArray) }
+  }
 
   /**
    * kNN over a [[graft.table.SpatialTable]] snapshot: identical search,
@@ -98,23 +134,27 @@ object KnnJoin {
    *            stats count, else the manifest's row total over its
    *            partitions, for the plain and the temporal layout alike —
    *            so no count() pass over the point table runs before the
-   *            search (VERDICT r3 "What's wrong" #2: at 100 TB that pass
-   *            is a full scan to estimate one constant the manifest
-   *            already knows). Only a legacy temporal manifest without a
+   *            search. Only a legacy temporal manifest without a
    *            partition list, and no stats, still counts.
-   *   pruning: each growth round scans only the stored `cell_prefix`
-   *            partitions that the active queries' disks reach, and the
-   *            final exact pass only those of the proven disks, so
+   *   pruning: each growth round's action scans only the stored
+   *            `cell_prefix` partitions that the active queries' disks
+   *            reach, and the lazy final pass only those of the proven
+   *            disks; the driver works the prefixes out from the disks
+   *            (`Cells.diskParents`) as plain Scala, so
    *            [[graft.table.SnapshotIndex]] lists and reads just those
    *            leaves. This is exact: a candidate's cell lies in the
    *            disk, and its stored prefix is that cell's parent at the
-   *            manifest's `prefixRes` (`Cells.diskParents`). It applies
-   *            when `res >= prefixRes` and the manifest lists its
-   *            partitions; otherwise every pass scans the snapshot.
-   *            `lonCol`/`latCol` must be the columns the table was
-   *            written with, which its cells were derived from.
+   *            manifest's `prefixRes`. It applies when `res >=
+   *            prefixRes` and the manifest lists its partitions;
+   *            otherwise every pass scans the snapshot. `lonCol`/`latCol`
+   *            must be the columns the table was written with, which its
+   *            cells were derived from.
    *
-   * [[lastSearch]] records the rounds and the prefixes kept per pass.
+   * So a query batch that settles in one growth round costs five Spark
+   * jobs: collecting the queries (none when they are a local relation),
+   * the round, and the final pass's broadcast, shuffle and result.
+   * [[lastSearch]] records the rounds, the active queries and the
+   * prefixes kept per pass.
    */
   def forTable(spark: SparkSession, root: String, snapshotId: String,
                lonCol: String, latCol: String,
@@ -159,30 +199,13 @@ object KnnJoin {
                      k: Int, res: Int, maxRings: Int, metric: String,
                      tieBreakCols: Seq[String], pointCount: Option[Long],
                      prefixes: Option[Prefixes]): DataFrame = {
+    import spark.implicits._
     require(metric == "haversine" || metric == "planar", s"unknown metric $metric")
     val planar = metric == "planar"
     val tieBreak = if (tieBreakCols.nonEmpty) tieBreakCols else Seq(lonCol, latCol)
 
-    def distExpr: Column =
-      if (planar)
-        sqrt((col(lonCol) - col(qLonCol)) * (col(lonCol) - col(qLonCol)) +
-          (col(latCol) - col(qLatCol)) * (col(latCol) - col(qLatCol)))
-      else
-        StFunctions.stDistanceSphere(
-          StFunctions.stMakePoint(col(lonCol), col(latCol)),
-          StFunctions.stMakePoint(col(qLonCol), col(qLatCol)))
-
+    val distExpr = distance(planar, lonCol, latCol, qLonCol, qLatCol)
     val pts = points.withColumn("__pcell", StFunctions.stCellOfXY(col(lonCol), col(latCol), lit(res)))
-    val qs = queries.withColumn("__qcell", StFunctions.stCellOfXY(col(qLonCol), col(qLatCol), lit(res)))
-
-    // a pass's candidates: the points of its disks, scanning only the
-    // stored prefixes those disks reach when the scan has them
-    def candidates(ringOf: DataFrame, kept: Seq[Long]): DataFrame = {
-      val scan = if (prefixes.isEmpty) pts else pts.where(col("cell_prefix").isin(kept: _*))
-      scan.join(
-        broadcast(ringOf.withColumn("__cell", explode(StFunctions.stCellDisk(col("__qcell"), col("__ring"))))),
-        col("__pcell") === col("__cell"))
-    }
 
     // -- density-seeded initial radius ---------------------------------
     // expected candidates in a (2r+1)^2 disk ~ 4k => r from the global
@@ -195,105 +218,92 @@ object KnnJoin {
     val ring0 = math.max(1, math.min(maxRings,
       math.ceil((math.sqrt(4.0 * k / math.max(perCell, 1e-12)) - 1) / 2).toInt))
 
-    // the disk a done query's final pass searches
-    val provenDisk = when(col("__capped") || col("__dk").isNull, lit(maxRings))
-      .otherwise(provenRing(col("__dk"), col(qLatCol), lit(res), lit(maxRings), lit(planar)))
+    // -- the queries and their search state, on the driver ---------------
+    // cells come from the same expression as the points' cells
+    val nq = queries.columns.length
+    val qs = queries.select(col("*"), StFunctions.stCellOfXY(col(qLonCol), col(qLatCol), lit(res)).as("__qcell"),
+      col(qLonCol).cast("double").as("__qlon"), col(qLatCol).cast("double").as("__qlat"))
+    val located = qs.collect().filterNot(_.isNullAt(nq))
+    val cells = located.map(_.getLong(nq))
+    val (qlon, qlat) = (located.map(_.getDouble(nq + 1)), located.map(_.getDouble(nq + 2)))
+    val dk = Array.fill(located.length)(Double.NaN) // kth distance, once observed
 
-    // -- the one driver action per round -------------------------------
-    // Whether any query is still active and, for a table scan, the live
-    // stored prefixes of the disks the next pass searches: the growth
-    // disks of the active queries, or once none is active the proven
-    // disks of all. (active, prefix) pairs are made distinct within each
-    // state partition, so one job with no shuffle returns at most twice
-    // the prefix count per partition, whatever the query count.
-    def reach(state: DataFrame): (Boolean, Seq[Long]) = prefixes match {
-      case None => (!state.where(!col("__done")).isEmpty, Nil)
-      case Some(p) =>
-        import spark.implicits._
-        val pairs = state
-          .select(!col("__done"), explode(diskParents(col("__qcell"),
-            when(col("__done"), provenDisk).otherwise(col("__ring")), lit(p.res))))
-          .as[(Boolean, Long)].mapPartitions(_.toSet.iterator).collect().distinct
-        val active = pairs.exists(_._1)
-        (active, pairs.collect { case (a, prefix) if a == active && p.live(prefix) => prefix }.sorted.toSeq)
+    // a pass's scan over the disks of the given (query, ring) pairs: only
+    // the stored prefixes those disks reach, when the scan has them
+    val keptPerPass = mutable.ArrayBuffer.empty[Int]
+    val activePerPass = mutable.ArrayBuffer.empty[Int]
+    def scan(rings: Seq[(Int, Int)]): DataFrame = {
+      activePerPass += rings.size
+      prefixes.fold(pts) { p =>
+        val kept = rings.flatMap { case (i, r) => Cells.diskParents(cells(i), r, p.res) }
+          .filter(p.live).distinct.sorted
+        keptPerPass += kept.size
+        pts.where(col("cell_prefix").isin(kept: _*))
+      }
     }
 
-    // -- growth with per-query state AS A DATAFRAME ---------------------
-    // state carries every query column plus (__ring, __dk, __capped,
-    // __done). Each round: candidates for the still-active queries, a
-    // per-qid (count, kth-distance) aggregate, then ONE left join back
-    // against the broadcast aggregate — no driver-side qid map, no
-    // `isin` qid list, no per-round plan that grows with the number of
-    // satisfied queries. The driver sees only `reach` per round, so
-    // 10^5-10^6 query points stream through exactly like 10.
-    // localCheckpoint truncates the iterative lineage (same trick as
-    // iterative MLlib algorithms); the first one also keeps the caller's
-    // literal query columns out of every generated stage, so warm
-    // queries reuse compiled code. Each is lazy: the `reach` action
-    // right after it materializes it, one job fewer per checkpoint.
-    var state = qs.select(col("*"), lit(ring0).as("__ring"), lit(null).cast("double").as("__dk"),
-      lit(false).as("__capped"), lit(false).as("__done")).localCheckpoint(eager = false)
+    // -- growth: one action per round ----------------------------------
+    // every active query shares the ring: all start at ring0 and double
+    // together until each has k candidates or reaches maxRings
+    var active: Seq[Int] = located.indices
     var ring = ring0
-    var (remaining, kept) = reach(state)
-    val keptPerPass = Seq.newBuilder[Int]
-    var rounds = 0
-    while (remaining) {
-      rounds += 1
-      if (prefixes.nonEmpty) keptPerPass += kept.size
-      val stats = candidates(state.where(!col("__done")), kept).withColumn("__dist", distExpr)
-        .withColumn("__rn", row_number().over(Window.partitionBy(qidCol).orderBy(col("__dist"))))
-        .where(col("__rn") <= k)
-        .groupBy(qidCol).agg(count(lit(1)).as("__n"), max("__dist").as("__dk_new"))
-      val atCap = ring >= maxRings
-      val nextRing = math.min(maxRings, ring * 2)
-      val sat = !col("__done") && coalesce(col("__n") >= k, lit(false))
-      val done = col("__done") || sat || lit(atCap)
-      val updated = Map(
-        "__dk" -> when(sat, col("__dk_new")).otherwise(col("__dk")),
+    while (active.nonEmpty) {
+      val rings = active.map(_ -> ring)
+      val byCell = rings.flatMap { case (i, r) => Cells.disk(cells(i), r).map(_ -> i) }.groupMap(_._1)(_._2)
+      val nearestOf = scan(rings).where(col("__pcell").isNotNull)
+        .select(col("__pcell"), col(lonCol).cast("double"), col(latCol).cast("double")).as[(Long, Double, Double)]
+        .mapPartitions(nearest(k, planar, byCell, qlon, qlat)).collect()
+        .groupMapReduce(_._1)(_._2)(_ ++ _)
+      active = active.filter { i =>
+        val ds = nearestOf.getOrElse(i, Array.empty[Double])
+        if (ds.length >= k) dk(i) = ds.sorted(Ordering.Double.TotalOrdering)(k - 1)
         // at the ring budget, short queries keep the maxRings disk
         // instead of disappearing (sparse-data semantics)
-        "__capped" -> (col("__capped") || (!col("__done") && !sat && lit(atCap))),
-        "__done" -> done,
-        "__ring" -> when(done, col("__ring")).otherwise(lit(nextRing)))
-      val joined = state.join(broadcast(stats), Seq(qidCol), "left")
-      state = joined.select(joined.columns.filterNot(Set("__n", "__dk_new"))
-        .map(c => updated.get(c).fold(joined(s"`$c`"))(_.as(c))): _*)
-        .localCheckpoint(eager = false)
-      ring = nextRing
-      val r = reach(state)
-      remaining = r._1
-      kept = r._2
+        ds.length < k && ring < maxRings
+      }
+      ring = math.min(maxRings, ring * 2)
     }
-    if (prefixes.nonEmpty) keptPerPass += kept.size
-    last = Search(rounds, keptPerPass.result(), prefixes.fold(0)(_.live.size))
 
-    // -- final exact pass over the proven disks ------------------------
-    val qsProven = state.withColumn("__ring", provenDisk).drop("__dk", "__capped", "__done")
-    candidates(qsProven, kept)
+    // -- final exact pass over the proven disks, lazy -------------------
+    // the disks go to Spark as a local relation of the query's columns
+    // and `__cell`
+    val proven = located.indices.map { i =>
+      i -> (if (dk(i).isNaN) maxRings else provenRing(dk(i), qlat(i), res, maxRings, planar))
+    }
+    val disks = proven.flatMap { case (i, r) => Cells.disk(cells(i), r).map(c => Row.fromSeq(located(i).toSeq :+ c)) }
+    val out = scan(proven)
+      .join(broadcast(spark.createDataFrame(disks.asJava, qs.schema.add("__cell", LongType))),
+        col("__pcell") === col("__cell"))
       .withColumn("dist", distExpr)
       .withColumn("__rn", row_number().over(
         Window.partitionBy(qidCol).orderBy(col("dist") +: tieBreak.map(col): _*)))
       .where(col("__rn") <= k)
-      .drop("__rn", "__pcell", "__qcell", "__cell", "__ring")
+      .drop("__rn", "__pcell", "__qcell", "__qlon", "__qlat", "__cell")
+    last = Search(activePerPass.size - 1, activePerPass.toSeq, keptPerPass.toSeq, prefixes.fold(0)(_.live.size))
+    out
   }
 
-  /** Brute-force oracle (for tests): exact cross-join top-k. */
+  /** The distance between a point and a query point: planar degrees,
+    * or haversine meters. */
+  private def distance(planar: Boolean, lonCol: String, latCol: String,
+                       qLonCol: String, qLatCol: String): Column =
+    if (planar)
+      sqrt((col(lonCol) - col(qLonCol)) * (col(lonCol) - col(qLonCol)) +
+        (col(latCol) - col(qLatCol)) * (col(latCol) - col(qLatCol)))
+    else
+      StFunctions.stDistanceSphere(
+        StFunctions.stMakePoint(col(lonCol), col(latCol)),
+        StFunctions.stMakePoint(col(qLonCol), col(qLatCol)))
+
+  /** Brute-force oracle (for tests): exact cross-join top-k, ties broken
+    * like the operator's. */
   def bruteForce(points: DataFrame, lonCol: String, latCol: String,
                  queries: DataFrame, qidCol: String, qLonCol: String, qLatCol: String,
-                 k: Int, metric: String = "haversine"): DataFrame = {
-    val distExpr: Column =
-      if (metric == "planar")
-        sqrt((col(lonCol) - col(qLonCol)) * (col(lonCol) - col(qLonCol)) +
-          (col(latCol) - col(qLatCol)) * (col(latCol) - col(qLatCol)))
-      else
-        StFunctions.stDistanceSphere(
-          StFunctions.stMakePoint(col(lonCol), col(latCol)),
-          StFunctions.stMakePoint(col(qLonCol), col(qLatCol)))
+                 k: Int, metric: String = "haversine", tieBreakCols: Seq[String] = Nil): DataFrame =
     points.crossJoin(broadcast(queries))
-      .withColumn("dist", distExpr)
-      .withColumn("__rn", row_number().over(
-        Window.partitionBy(qidCol).orderBy(col("dist"), col(lonCol), col(latCol))))
+      .withColumn("dist", distance(metric == "planar", lonCol, latCol, qLonCol, qLatCol))
+      .withColumn("__rn", row_number().over(Window.partitionBy(qidCol).orderBy(col("dist") +:
+        (if (tieBreakCols.nonEmpty) tieBreakCols else Seq(lonCol, latCol)).map(col): _*)))
       .where(col("__rn") <= k)
       .drop("__rn")
-  }
 }

@@ -265,9 +265,9 @@ class OperatorsSpec extends AnyFunSuite with SparkTest {
       assert(seeded == raw, s"$layout: metadata seed changed results: ${seeded -- raw} / ${raw -- seeded}")
       assert(seeded == ids(KnnJoin.bruteForce(ptsDf, "lon", "lat",
         queries, "qid", "qlon", "qlat", k = 5)), layout)
-      // the search starts by checkpointing the query state: before it,
-      // the raw frame counts its points, the table seeds from metadata
-      def beforeSearch(actions: Seq[String]) = actions.takeWhile(_ != "localCheckpoint")
+      // the search starts by collecting the queries: before it, the raw
+      // frame counts its points, the table seeds from metadata
+      def beforeSearch(actions: Seq[String]) = actions.takeWhile(_ != "collect")
       assert(beforeSearch(rawActions) == Seq("count"), s"$layout: raw path actions $rawActions")
       assert(beforeSearch(seededActions).isEmpty,
         s"$layout: expected the seeded path to skip the count() scan: $seededActions")
@@ -395,8 +395,8 @@ class OperatorsSpec extends AnyFunSuite with SparkTest {
       .toDF("qid", "qlon", "qlat")
     val fastDf = KnnJoin(spark, pts, "lon", "lat", queries, "qid", "qlon", "qlat",
       k = 3, res = 5, metric = "planar", tieBreakCols = Seq("id"))
-    // the growth loop keeps per-query state as a DataFrame: the final
-    // plan must not carry a literal qid IN-list
+    // the queries reach the final pass as a local relation joined on
+    // cells: the final plan must not carry a literal qid IN-list
     val inLists = fastDf.queryExecution.optimizedPlan.collect { case p =>
       p.expressions.flatMap(_.collect {
         case i: org.apache.spark.sql.catalyst.expressions.In => i
