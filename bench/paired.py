@@ -21,6 +21,10 @@ checkout and once in the change checkout, alternating which side runs first
 
 Both checkouts build their own benchmark jar on the first run (see
 spatialbench/build.py). A run that fails is reported and its pair left out.
+Make both checkouts fresh copies in sibling directories, for example
+`git archive <rev> | tar -x -C <dir>`: runs from a long-used working tree
+have read slower than a fresh copy of the same code, even on set-up and
+ingest.
 """
 import argparse
 import json

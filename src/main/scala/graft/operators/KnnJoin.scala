@@ -39,9 +39,10 @@ import graft.geom.GeomOps
  *            short of k grow to a doubled ring; satisfied ones keep
  *            their kth distance;
  *   proof:   any point outside disk radius r'(q) = ceil(d_k /
- *            metricCellWidth(lat_q)) + 1 is provably farther than the
- *            observed d_k (the k-completeness argument, done per query
- *            with the latitude-dependent east-west cell width);
+ *            metricCellWidth) + 1 is provably farther than the observed
+ *            d_k (the k-completeness argument, done per query, with the
+ *            east-west cell width at the poleward edge of the latitude
+ *            band within d_k of the query);
  *   final:   the returned DataFrame is LAZY: a scan of the points joined
  *            to a broadcast local relation of the proven disks (every
  *            query column plus `__cell`), then a top-k window over
@@ -89,26 +90,24 @@ object KnnJoin {
     * resolution and every live prefix of the snapshot. */
   private final case class Prefixes(res: Int, live: Set[Long])
 
-  /** Proof: observed kth distance -> proven disk radius. Any point
-    * outside disk radius ceil(d_k / metricCellWidth(lat_q)) + 1 is
-    * provably farther than the observed d_k. */
+  /** Proof: observed kth distance -> proven disk radius. A point more
+    * than ceil(d_k / stepNS) + 1 rows from the query is farther than d_k
+    * by its latitude alone, so the east-west step is taken at the edge of
+    * that band (cos(lat) shrinks it poleward); any point outside disk
+    * radius ceil(d_k / step) + 1, the larger over both steps, is then
+    * provably farther than d_k. A band that reaches a pole proves no
+    * radius below maxRings. */
   private def provenRing(dk: Double, qlat: Double, res: Int, maxRings: Int, planar: Boolean): Int = {
     val latW = Cells.latWidth(res)
     val lonW = Cells.lonWidth(res)
-    // metric width of one cell step: north-south is latitude-constant;
-    // east-west shrinks with cos(lat) — take the tighter requirement
-    // over the band the disk can reach
-    val (stepNS, stepEW) =
-      if (planar) (latW, lonW) // degree metric: grid steps are exact
-      else {
-        val bandLat = math.min(89.0, math.abs(qlat) + latW * (maxRings + 1))
-        (latW * MetersPerDegLat,
-          lonW * MetersPerDegLon * math.cos(math.toRadians(bandLat)))
-      }
-    val need = math.max(
-      math.ceil(dk / stepNS),
-      math.ceil(dk / math.max(1e-9, stepEW))).toInt + 1
-    math.min(maxRings, math.max(1, need))
+    // metric width of one cell step; the degree metric's steps are exact
+    val stepNS = if (planar) latW else latW * MetersPerDegLat
+    val rowsNS = math.ceil(dk / stepNS) + 1
+    val stepEW =
+      if (planar) lonW
+      else lonW * MetersPerDegLon * math.cos(math.toRadians(math.min(90.0, math.abs(qlat) + latW * rowsNS)))
+    val need = math.max(rowsNS, math.ceil(dk / math.max(1e-9, stepEW)) + 1)
+    math.min(maxRings.toDouble, math.max(1.0, need)).toInt
   }
 
   /** One round's work in one task: for each query, the k smallest
@@ -152,8 +151,9 @@ object KnnJoin {
    *
    * So a query batch that settles in one growth round costs five Spark
    * jobs: collecting the queries (none when they are a local relation),
-   * the round, and the final pass's broadcast, shuffle and result.
-   * [[lastSearch]] records the rounds, the active queries and the
+   * the round, and the final pass's broadcast, shuffle and result. The
+   * snapshot scan is sized from its manifest row counts, so planning the
+   * final join lists no leaf. [[lastSearch]] records the rounds, the active queries and the
    * prefixes kept per pass.
    */
   def forTable(spark: SparkSession, root: String, snapshotId: String,

@@ -34,16 +34,25 @@ import org.apache.spark.sql.types.{StructField, StructType}
  * snapshot's directories never change, so each directory is listed at
  * most once per index instance.
  *
+ * `sizeInBytes`, which join planning asks of the whole relation before
+ * any pruning, lists nothing when the manifest knows the leaves' row
+ * counts: it is the rows times the data schema's default row size, an
+ * uncompressed estimate (about twice the Parquet bytes of a 30k-row
+ * temporal point table), so a join rarely broadcasts a table side it
+ * would not have broadcast by the listed bytes. Leaves without counts
+ * (index layouts) are listed and their file lengths summed.
+ *
  * `metadataOpsTimeNs` reports listing time no scan has been charged for
- * yet — listing done ahead of a scan, such as `sizeInBytes` for join
- * planning — and resets it. The scan node reads it just before its own
- * `listFiles` call, which it times itself, and adds both to its
- * `metadataTime` SQL metric, so each listing is charged once, to the
- * first scan after it.
+ * yet — listing done ahead of a scan, such as `inputFiles` or an
+ * uncounted `sizeInBytes` — and resets it. The scan node reads it just
+ * before its own `listFiles` call, which it times itself, and adds both
+ * to its `metadataTime` SQL metric, so each listing is charged once, to
+ * the first scan after it.
  */
 private[table] final class SnapshotIndex(spark: SparkSession,
                                          override val partitionSchema: StructType,
-                                         private val leaves: Seq[(Seq[Any], Path)])
+                                         private val leaves: Seq[(Seq[Any], Path)],
+                                         estimatedBytes: Option[Long])
     extends FileIndex {
 
   private val rows: Seq[(InternalRow, Path)] =
@@ -64,8 +73,8 @@ private[table] final class SnapshotIndex(spark: SparkSession,
   override def inputFiles: Array[String] =
     charged(filesIn(rows.map(_._2))).flatten.map(_.getPath.toString).toArray
 
-  override def sizeInBytes: Long =
-    charged(filesIn(rows.map(_._2))).iterator.flatMap(_.iterator).map(_.getLen).sum
+  override def sizeInBytes: Long = estimatedBytes.getOrElse(
+    charged(filesIn(rows.map(_._2))).iterator.flatMap(_.iterator).map(_.getLen).sum)
 
   override def refresh(): Unit = listed.clear()
 
@@ -131,15 +140,16 @@ private[table] object SnapshotIndex {
    * each directory with its partition values in `partitionCols` order.
    * Every column reads nullable, as a Parquet scan reports it. Pushed
    * filters, row-group skipping and partition pruning behave as on a
-   * directory read.
+   * directory read. `rows`, the leaves' total row count when the
+   * manifest records it, sizes the relation without a listing.
    */
   def scan(spark: SparkSession, columns: StructType, partitionCols: Seq[String],
-           leaves: Seq[(Seq[Any], String)]): DataFrame = {
+           leaves: Seq[(Seq[Any], String)], rows: Option[Long] = None): DataFrame = {
     def nullable(fields: Seq[StructField]) = StructType(fields.map(_.copy(nullable = true)))
     val partitionSchema = nullable(partitionCols.map(columns(_)))
     val dataSchema = nullable(columns.filterNot(f => partitionCols.contains(f.name)))
     val index = new SnapshotIndex(spark, partitionSchema,
-      leaves.map { case (values, dir) => (values, new Path(dir)) })
+      leaves.map { case (values, dir) => (values, new Path(dir)) }, rows.map(_ * dataSchema.defaultSize))
     spark.baseRelationToDataFrame(HadoopFsRelation(index, partitionSchema, dataSchema,
       bucketSpec = None, new ParquetFileFormat, Map.empty)(spark))
   }

@@ -226,13 +226,14 @@ object TableEngine {
     if (!m.keyed) spark.read.parquet(s"$root/data/snapshot=${m.snapshot}")
     else scan(spark, root, m, m.physicalKeys.toSeq)
 
-  /** A scan over the given live keys (key -> physical holder). */
+  /** A scan over the given live keys (key -> physical holder), sized
+    * by the keys' manifest row counts. */
   private def scan(spark: SparkSession, root: String, m: TableManifest[KeyLayout],
                    keys: Seq[(Key, String)]): DataFrame =
     SnapshotIndex.scan(spark, m.readSchema, m.layout.partitionCols,
       keys.sortBy(e => m.relpath(e._1)).map { case (k, src) =>
         (k.values, s"$root/data/snapshot=$src/${m.relpath(k)}")
-      })
+      }, Some(keys.map(e => m.partitions(e._1)).sum))
 
   /** Index layout scan, planned like [[read]] (Snapshots.indexRead).
     * Manifests without a schema (legacy extent) read the directory. */

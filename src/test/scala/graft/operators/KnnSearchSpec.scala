@@ -139,6 +139,17 @@ class KnnSearchSpec extends AnyFunSuite with SparkTest {
     searches.foreach { case (path, s) => assert(s.activeQueries.last == 1, s"$path: $s") }
   }
 
+  test("near a pole the proof reaches the longitudes its latitude band allows") {
+    // a cell is 1.4 by 2.8 degrees here; at 89.5 degrees a point 60
+    // degrees of longitude (21 columns) away is nearer than one 0.6
+    // degrees south in the query's own cell
+    val pts = Seq(("a", 60.0, 89.5), ("b", 0.0, 88.9)).toDF("id", "lon", "lat")
+    val qs = queryFrame(Seq(("pole", 0.0, 89.5)))
+    val got = comparable(KnnJoin(spark, pts, "lon", "lat", qs, "qid", "qlon", "qlat", k = 1, res = Res))
+    assert(got.map(_.getAs[String]("id")) == Seq("a"))
+    assert(got == oracle(pts, qs, k = 1, maxRings = 64, metric = "haversine", tieBreak = Nil))
+  }
+
   test("ties at the kth distance are settled by tieBreakCols") {
     val qs = queryFrame(Seq(("tie", 50.0, 40.0)))
     check(qs, k = 2, metric = "planar", tieBreak = Seq("id"))

@@ -277,14 +277,18 @@ class SnapshotIndexSpec extends AnyFunSuite with SparkTest {
       // the scan timed its own listing: nothing is left to charge
       val index = scan.relation.location
       assert(index.metadataOpsTimeNs.contains(0L))
-      // sizing the whole snapshot lists the rest, concurrently (more than
-      // the discovery threshold), once each; the next scan is charged
-      // for it once
-      val (_, sizeJobs, sizeLists) = measured(index.sizeInBytes)
-      assert(sizeJobs == 0)
-      assert(sizeLists.map(_.toUri.getPath).sorted.toSet.size == sizeLists.size &&
-        sizeLists.size == leaves - selected.size && sizeLists.size > 32,
-        s"${sizeLists.size} listings of ${leaves - selected.size} unlisted directories")
+      // sizing the whole snapshot lists nothing: the manifest's row
+      // counts size it
+      val (size, sizeJobs, sizeLists) = measured(index.sizeInBytes)
+      assert(size > 0 && sizeJobs == 0 && sizeLists.isEmpty, s"jobs=$sizeJobs listings=$sizeLists")
+      // naming its files lists the rest, concurrently (more than the
+      // discovery threshold), once each; the next scan is charged for it
+      // once
+      val (_, filesJobs, fileLists) = measured(index.inputFiles)
+      assert(filesJobs == 0)
+      assert(fileLists.map(_.toUri.getPath).sorted.toSet.size == fileLists.size &&
+        fileLists.size == leaves - selected.size && fileLists.size > 32,
+        s"${fileLists.size} listings of ${leaves - selected.size} unlisted directories")
       assert(index.metadataOpsTimeNs.exists(_ > 0))
       assert(index.metadataOpsTimeNs.contains(0L))
       assert(measured(index.inputFiles)._3.isEmpty, "every directory is listed once")
@@ -294,6 +298,30 @@ class SnapshotIndexSpec extends AnyFunSuite with SparkTest {
         .select("id").as[String].collect().sorted.toSeq
       assert(got.map(_.getAs[String]("id")).sorted.toSeq == expect && expect.nonEmpty)
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a forTable kNN lists only the leaves its passes keep, each once") {
+    val root = newRoot()
+    SpatialTable.writeTemporal(spark, points(2000), root, "s1", "id", "lon", "lat", "dtg",
+      period = "day", prefixRes = 2, salts = 2, partitions = 8)
+    val leaves = SpatialTable.manifestInfo(spark, root, "s1").physicalKeys.keys.toSeq
+    val qs = Seq((0, 10.0, 10.0), (1, 12.0, 8.0)).toDF("qid", "qlon", "qlat")
+    val (got, listed) = CountingFileSystem.during(spark) {
+      val out = graft.operators.KnnJoin.forTable(spark, root, "s1", "lon", "lat",
+        qs, "qid", "qlon", "qlat", k = 5, res = 9).collect()
+      (out, CountingFileSystem.listings.map(_.toUri.getPath))
+    }
+    val search = graft.operators.KnnJoin.lastSearch
+    assert(got.length == 10)
+    val prefix = "cell_prefix=(-?\\d+)$".r
+    val listedPrefixes = listed.map(d => prefix.findFirstMatchIn(d).map(_.group(1).toLong))
+    assert(listedPrefixes.forall(_.nonEmpty), s"listed a directory that is not a leaf: $listed")
+    assert(listed.distinct.size == listed.size, s"a leaf listed twice: $listed")
+    // every leaf (time bin) of each kept prefix, and no other
+    val kept = listedPrefixes.flatten.toSet
+    assert(listed.size == leaves.count(k => kept(k.value)), s"$listed")
+    assert(kept.size >= search.prefixesKept.max && kept.size <= search.prefixesKept.sum, s"$kept $search")
+    assert(listed.size < leaves.size / 2, s"${listed.size} of ${leaves.size} leaves listed, $search")
   }
 
   test("a directory the manifest names but the store lacks is an error, listed " +
